@@ -122,7 +122,12 @@ object Dedup {
           .select(col("node"), coalesce(col("ll"), col("label")).as("label"),
             col("prev"))
       }
-      val pairOut = hopJump(hopJump(labels, seedPrev = true), seedPrev = false)
+      // an odd maxIter leaves a single hop at the end: run it alone, so
+      // the loop never takes more hops than maxIter and an odd cutoff
+      // lands on the sequential form's labels too
+      val hops = math.min(2, maxIter - iter)
+      val first = hopJump(labels, seedPrev = true)
+      val pairOut = if (hops == 2) hopJump(first, seedPrev = false) else first
       val next = pairOut
         .select(col("node"), col("label"),
           (col("label") =!= col("prev")).as("changed"))
@@ -135,7 +140,7 @@ object Dedup {
       release(prevCkpt)
       prevCkpt = next
       labels = next.select(col("node"), col("label"))
-      iter += 2
+      iter += hops
     }
     release(sym)
     labels.select(col("node").as("node_id"), col("label").as("cluster_id"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * through the standard row-group import loop with tracking and optional
   * row filters (direct_import.py:22-105 → db.py import_parquet). Here the
   * same composition is [[ExportCatalog.parseName]] →
-  * [[RowGroupResume.importFull]] (row-group batches, crash-resumable
+  * [[RowGroupResume.importFile]] (row-group batches, crash-resumable
   * markers) → the caller's sink, with an optional
   * [[graft.operators.RowFilter]] predicate applied per batch before
   * delivery (the reference's `row_filters`, which its CLI TODO-stubs).
@@ -44,12 +44,8 @@ object DirectImport {
 
     val deliver: DataFrame => Unit = df =>
       sink(parsed.tableName, rowFilter.map(df.where).getOrElse(df))
-    val batches = RowGroupResume.importFull(
+    val r = RowGroupResume.importFile(
       spark, parquetFile, trackingDir, groupsPerBatch, deliver, shouldStop)
-    // progress is (last imported group INDEX, total groups): complete when
-    // the last 0-based index reaches total-1 (the reference's "actually
-    // completed" check, db.py:246-250)
-    val (lastImported, total) = RowGroupResume.progress(spark, trackingDir, parquetFile)
-    Result(parsed.tableName, fileType, batches, done = lastImported >= total - 1)
+    Result(parsed.tableName, fileType, r.batches, r.done)
   }
 }

@@ -1,11 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.RowGroupScan
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -21,46 +23,67 @@ import scala.jdk.CollectionConverters._
   * unrecorded batch — a 100 GB full that dies at 90% re-imports one batch,
   * not the file.
   *
-  *  - Row-group boundaries come from the parquet footer, read driver-side
-  *    (metadata only — the same names/metadata-only planning ExportCatalog
-  *    does at the file level).
-  *  - A batch is addressed as a `_metadata.row_index` range; the boundary
-  *    rows come from the footer's per-group row counts, so batch membership
-  *    is exact regardless of how Spark splits the file across tasks.
+  *  - The footer is read once per file, driver-side: row-group boundaries
+  *    (row counts, byte offsets and sizes) and the Spark schema come from
+  *    that one read — no schema-inference job, no second footer open.
+  *  - A batch is a scan of exactly its own row groups, one task per group
+  *    ([[org.apache.spark.sql.graft.RowGroupScan]]): each task's byte range
+  *    is one group's, so batch membership is exact by construction.
   *  - Progress is a marker file per completed batch (`rg-<lastGroup>`) —
   *    atomic create, no read-modify-write, safe under concurrent observers.
   *    Markers are recorded AFTER the sink commits, so the crash window
   *    re-imports the in-flight batch; the sink's latest-wins upsert makes
   *    that replay idempotent, exactly the reference's semantics.
   *
-  * Scale note: on resume the scan still *opens* the file and discards
-  * already-imported rows via the row-index predicate (Spark's parquet
-  * reader has no row-group skip for metadata predicates). That cost is paid
-  * once, after a crash, and is a pure scan — no shuffle. The common case —
+  * Scale note: a batch touches only its groups' byte ranges, so a full of
+  * G groups costs one scan of the file in G tasks whatever the batch size
+  * B, and a resume skips the committed groups without opening their pages.
+  * A batch runs its B groups as B parallel tasks, so B is both the commit
+  * granularity and the sink's write parallelism. The common case —
   * a multi-file 100 TB full — resumes at file granularity first
-  * (ExportCatalog), and this path only re-reads the one interrupted file.
+  * (ExportCatalog), and this path only walks the one interrupted file.
   */
 object RowGroupResume {
 
-  /** One parquet row group: ordinal, row count, and the file-wide index of
-    * its first row (cumulative sum of prior groups' counts).
+  /** One parquet row group: ordinal, row count, the file-wide index of its
+    * first row (cumulative sum of prior groups' counts), and its byte range
+    * — the first column chunk's starting position (its dictionary page when
+    * it has one) and the group's compressed size.
     */
-  final case class RowGroup(index: Int, rows: Long, firstRowIndex: Long)
+  final case class RowGroup(index: Int, rows: Long, firstRowIndex: Long, start: Long, bytes: Long)
+
+  /** What one footer read of a parquet file yields: its status, its row
+    * groups, and the Spark schema `spark.read.parquet` would infer for it.
+    */
+  final case class ParquetFooter(status: FileStatus, groups: Seq[RowGroup], schema: StructType)
+
+  private def readFooter[T](conf: Configuration, file: String)(f: (FileStatus, ParquetMetadata) => T): T = {
+    val path = new Path(file)
+    val status = path.getFileSystem(conf).getFileStatus(path)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+    try f(status, reader.getFooter) finally reader.close()
+  }
+
+  private def groupsOf(footer: ParquetMetadata): Seq[RowGroup] = {
+    var firstRow = 0L
+    footer.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
+      val g = RowGroup(i, b.getRowCount, firstRow, b.getStartingPos, b.getCompressedSize)
+      firstRow += b.getRowCount
+      g
+    }
+  }
 
   /** Read row-group boundaries from the parquet footer — driver-side, no
     * data pages touched.
     */
-  def rowGroups(conf: Configuration, file: String): Seq[RowGroup] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    try {
-      var firstRow = 0L
-      reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
-        val g = RowGroup(i, b.getRowCount, firstRow)
-        firstRow += b.getRowCount
-        g
-      }
-    } finally reader.close()
-  }
+  def rowGroups(conf: Configuration, file: String): Seq[RowGroup] =
+    readFooter(conf, file)((_, footer) => groupsOf(footer))
+
+  /** Row groups and Spark schema of `file` from a single footer read. */
+  def footer(spark: SparkSession, file: String): ParquetFooter =
+    readFooter(spark.sparkContext.hadoopConfiguration, file) { (status, footer) =>
+      ParquetFooter(status, groupsOf(footer), RowGroupScan.schema(spark, status, footer))
+    }
 
   /** Tracking markers live under `trackingDir/<base name>-<path hash>/rg-<N>`.
     * The path hash disambiguates files that share a base name under
@@ -111,16 +134,13 @@ object RowGroupResume {
     catch { case e: java.io.IOException => if (!fs.exists(p)) throw e }
   }
 
-  /** The rows of row groups [from..to] as a DataFrame — a row-index range
-    * over one parquet scan of `file`.
+  /** The outcome of one import invocation: batches delivered, and the
+    * reference's `(last_row_group_imported, total_row_groups)` tracking row
+    * after them. A full is "actually completed" when they meet
+    * (db.py:246-250) — including a file with no row groups at all.
     */
-  def groupRange(spark: SparkSession, file: String, groups: Seq[RowGroup], from: Int, to: Int): DataFrame = {
-    val startRow = groups(from).firstRowIndex
-    val endRow = groups(to).firstRowIndex + groups(to).rows
-    spark.read.parquet(file)
-      .withColumn("_rg_row", col("_metadata.row_index"))
-      .where(col("_rg_row") >= startRow && col("_rg_row") < endRow)
-      .drop("_rg_row")
+  final case class Imported(batches: Int, lastImported: Int, totalGroups: Int) {
+    def done: Boolean = lastImported >= totalGroups - 1
   }
 
   /** Import `file` into `sink` in row-group-aligned batches of
@@ -141,23 +161,37 @@ object RowGroupResume {
       trackingDir: String,
       groupsPerBatch: Int,
       sink: DataFrame => Unit,
-      shouldStop: () => Boolean = () => false): Int = {
+      shouldStop: () => Boolean = () => false): Int =
+    importFile(spark, file, trackingDir, groupsPerBatch, sink, shouldStop).batches
+
+  /** [[importFull]], also reporting the progress it leaves behind — derived
+    * from the footer and marker listing the import already read, so asking
+    * "is the file done?" costs no second footer open.
+    */
+  def importFile(
+      spark: SparkSession,
+      file: String,
+      trackingDir: String,
+      groupsPerBatch: Int,
+      sink: DataFrame => Unit,
+      shouldStop: () => Boolean = () => false): Imported = {
     require(groupsPerBatch > 0)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(trackingDir).getFileSystem(conf)
-    val groups = rowGroups(conf, file)
-    val start = lastImported(fs, trackingDir, file) + 1
+    val fs = new Path(trackingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val footer = this.footer(spark, file)
+    var last = lastImported(fs, trackingDir, file)
+    val it = footer.groups.drop(last + 1).grouped(groupsPerBatch)
+    lazy val reader = new RowGroupScan.Reader(spark, footer.status, footer.schema)
     var imported = 0
-    val it = groups.drop(start).grouped(groupsPerBatch)
     while (it.hasNext && !shouldStop()) {
       val batch = it.next()
-      sink(groupRange(spark, file, groups, batch.head.index, batch.last.index))
+      sink(reader.groups(batch.map(g => (g.start, g.bytes))))
       // progress lands only after the sink committed: the crash window
       // replays the in-flight batch (idempotent under the upsert guard)
       batch.foreach(g => recordProgress(fs, trackingDir, file, g.index))
+      last = batch.last.index
       imported += 1
     }
-    imported
+    Imported(imported, last, footer.groups.size)
   }
 
   /** `(resume point, total groups)` — the reference's

@@ -73,4 +73,25 @@ class CosinePreSpec extends SparkSpec {
       .where(!(col("f") <=> col("p"))).count()
     assert(diff == 0L, s"$diff pairs diverge")
   }
+
+  test("ragged vectors are out of cosinePre's contract: the two forms diverge") {
+    // the fused kernel truncates BOTH norms to min(|a|, |b|) elements; the
+    // hoisted norm covers the whole row. On ragged input the dot is the
+    // same but the denominators differ, so cosinePre is exact only when
+    // every vector has the call site's fixed dimension — which is why no
+    // per-row length check rides the pair loop.
+    val a = Seq(1.0f, 0.0f)
+    val b = Seq(1.0f, 0.0f, 1.0f)
+    val r = spark.createDataFrame(
+        java.util.Arrays.asList(org.apache.spark.sql.Row(a, b)), schema)
+      .select(
+        Similarity.cosine(col("a"), col("b")),
+        Similarity.cosinePre(col("a"), col("b"),
+          Similarity.norm(col("a")), Similarity.norm(col("b"))))
+      .head()
+    assert(r.getDouble(0) == 1.0, "fused: b truncated to |a| = 2 elements, parallel to a")
+    assert(r.getDouble(1) == 1.0 / math.sqrt(2.0), "hoisted: the full norm of b")
+    // the same pair at equal length agrees bit for bit again
+    check(Seq((a :+ 0.0f, b)))
+  }
 }

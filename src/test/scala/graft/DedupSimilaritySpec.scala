@@ -276,9 +276,11 @@ class DedupSimilaritySpec extends SparkSpec {
   test("paired-iteration CC equals the sequential r18 loop, converged AND maxIter-cut") {
     // the r19 paired loop's contract: label trajectory (jump∘hop)^2k is
     // the sequential form composed — labels must match bit-for-bit not
-    // just at convergence but at ANY even hop-count cutoff. A 64-node
-    // chain with maxIter = 4 exercises the cutoff (4 hops are far from
-    // convergence); the mixed graph exercises the convergence exit.
+    // just at convergence but at ANY hop-count cutoff. A 64-node chain
+    // with maxIter = 4 exercises the cutoff (4 hops are far from
+    // convergence); the mixed graph exercises the convergence exit. An odd
+    // maxIter ends on a single trailing hop, which must stop at the same
+    // labels as the sequential loop's odd cutoff.
     def run(f: (org.apache.spark.sql.DataFrame, String, String, Int,
         Option[String]) => org.apache.spark.sql.DataFrame,
         pairs: Seq[(Long, Long)], maxIter: Int): Map[Long, Long] =
@@ -287,7 +289,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val chain = (0L until 63L).map(i => (i, i + 1))
     val mixed = ((0L until 20L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (200L, 201L))).toSeq
-    for ((g, mi) <- Seq((chain, 4), (chain, 20), (mixed, 20), (mixed, 2))) {
+    for ((g, mi) <- Seq((chain, 4), (chain, 20), (mixed, 20), (mixed, 2),
+        (chain, 3), (chain, 5), (mixed, 1))) {
       val seq = run(Dedup.connectedComponentsSeq, g, mi)
       val par = run(Dedup.connectedComponents, g, mi)
       assert(par == seq, s"graph=${g.take(2)}... maxIter=$mi")

@@ -397,4 +397,162 @@ class SourcesStreamingSpec extends SparkSpec {
     assert(GlobalFlakyModel.table.asScala.toMap == oneShot,
       "crash + resume through the retrying sink must equal the one-shot import")
   }
+
+  /** One parquet part file of `df`, written in row groups far smaller than
+    * Spark's split size; extra writer options select the page encodings.
+    */
+  private def groupedFile(df: org.apache.spark.sql.DataFrame, opts: (String, String)*): String = {
+    val dir = Files.createTempDirectory("graft-rgfile").toFile.getAbsolutePath + "/f"
+    df.coalesce(1).write
+      .option("parquet.block.size", "16384").option("parquet.page.size", "4096")
+      .options(opts.toMap).parquet(dir)
+    new java.io.File(dir).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .get.getAbsolutePath
+  }
+
+  /** Per job of one job group: its task count; and the parquet records
+    * read by the tasks of those jobs.
+    */
+  private final class WorkCounter(group: String) extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerTaskEnd}
+    val jobTasks = scala.collection.mutable.ArrayBuffer.empty[Int]
+    private val stages = scala.collection.mutable.Set.empty[Int]
+    var records = 0L
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+        jobTasks += e.stageInfos.map(_.numTasks).sum
+        stages ++= e.stageIds
+      }
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (stages.contains(e.stageId) && e.taskMetrics != null)
+        records += e.taskMetrics.inputMetrics.recordsRead
+    }
+  }
+
+  test("row-group import reads each row once: one job per batch, one task per group") {
+    // the work-counter check on the import path: a whole-file scan per
+    // batch reads the file groups/gpb times over, and a per-batch schema
+    // inference adds a job to every batch — either fails this
+    val file = groupedFile(spark.range(20000)
+      .select(col("id"), concat(lit("v"), col("id")).as("v")))
+    val root = Files.createTempDirectory("graft-rgwork").toFile.getAbsolutePath
+    val groups = RowGroupResume.rowGroups(spark.sparkContext.hadoopConfiguration, file)
+    assert(groups.size >= 12, s"need many row groups, got ${groups.size}")
+    val group = s"rg-work-${System.nanoTime()}"
+    val counter = new WorkCounter(group)
+    val sc = spark.sparkContext
+    sc.addSparkListener(counter)
+    var delivered = 0L
+    try {
+      sc.setJobGroup(group, "row-group work counter")
+      RowGroupResume.importFull(spark, file, s"$root/track", 4,
+        df => delivered += df.select("id").as[Long].collect().length)
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.graft.ListenerDrain(sc)
+      sc.removeSparkListener(counter)
+    }
+    assert(delivered == 20000L)
+    assert(counter.records == 20000L, s"scan amplification ${counter.records / 20000.0}, want 1")
+    assert(counter.jobTasks.toSeq == groups.grouped(4).map(_.size).toSeq,
+      "each batch: exactly one job, one task per row group")
+  }
+
+  test("row-group batches hold exactly their groups' rows (dictionary, plain, uneven batches)") {
+    val base = spark.range(12000).select(
+      // low-cardinality string FIRST: every group's starting position is
+      // its first column's dictionary page, not its first data page
+      (col("id") % 5).cast("string").as("kind"), col("id"), (col("id") * 7 % 1000).as("v"))
+    val dict = groupedFile(base)
+    val plain = groupedFile(base, "parquet.enable.dictionary" -> "false")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def firstColumns(file: String) = {
+      import scala.jdk.CollectionConverters._
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
+      try r.getFooter.getBlocks.asScala.map(_.getColumns.get(0)).toSeq finally r.close()
+    }
+    val dictCols = firstColumns(dict)
+    assert(dictCols.forall(c => c.hasDictionaryPage && c.getDictionaryPageOffset < c.getFirstDataPageOffset))
+    assert(RowGroupResume.rowGroups(conf, dict).map(_.start) == dictCols.map(_.getDictionaryPageOffset))
+    assert(!firstColumns(plain).exists(_.hasDictionaryPage))
+
+    for (file <- Seq(dict, plain)) {
+      val groups = RowGroupResume.rowGroups(conf, file)
+      // the reference: each row's file-wide row index from a whole-file scan
+      val byRowIndex = spark.read.parquet(file)
+        .select(col("_metadata.row_index"), col("id")).as[(Long, Long)].collect().toMap
+      val gpb = (3 to 7).find(groups.size % _ != 0).get
+      assert(groups.size > gpb, s"need more groups than a batch, got ${groups.size}")
+      val root = Files.createTempDirectory("graft-rgmember").toFile.getAbsolutePath
+      val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+      assert(RowGroupResume.importFull(spark, file, s"$root/track", gpb,
+        df => got += df.select("id").as[Long].collect().toSeq) == (groups.size + gpb - 1) / gpb)
+      groups.grouped(gpb).toSeq.zip(got).foreach { case (batch, ids) =>
+        val from = batch.head.firstRowIndex
+        val until = batch.last.firstRowIndex + batch.last.rows
+        assert(ids.size.toLong == batch.map(_.rows).sum, s"$file groups ${batch.map(_.index)}")
+        assert(ids.sorted == (from until until).map(byRowIndex),
+          s"$file groups ${batch.map(_.index)}: rows outside the batch's groups")
+      }
+    }
+  }
+
+  /** A parquet file written by plain parquet-mr — no Spark schema in its
+    * key-value metadata, as an export from a non-Spark writer — with the
+    * given rows of (id, name, payload, ts micros).
+    */
+  private def foreignFile(path: String, rows: Seq[(Long, String, Array[Byte], Long)]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message export {
+        |  required int64 id;
+        |  optional binary name (STRING);
+        |  optional binary payload;
+        |  optional int64 ts (TIMESTAMP(MICROS,true));
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, name, payload, ts) =>
+      writer.write(groups.newGroup().append("id", id).append("name", name)
+        .append("payload", Binary.fromConstantByteArray(payload)).append("ts", ts))
+    } finally writer.close()
+  }
+
+  test("footer schema equals spark.read.parquet's; a file with no row groups is done at once") {
+    val dir = Files.createTempDirectory("graft-rgschema").toFile.getAbsolutePath
+    val foreign = s"$dir/public-things-0-100.parquet"
+    foreignFile(foreign, (0L until 50L).map(i =>
+      (i, s"n$i", Array[Byte](i.toByte, 1), 1700000000000000L + i)))
+    val sparkWritten = groupedFile(spark.range(50).select(col("id"),
+      concat(lit("n"), col("id")).as("name"), col("id").cast("string").cast("binary").as("payload"),
+      col("id").cast("timestamp").as("ts")))
+    for (file <- Seq(foreign, sparkWritten)) {
+      val footer = RowGroupResume.footer(spark, file)
+      val want = spark.read.parquet(file).schema
+      assert(want.map(_.dataType) == Seq(
+        org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.StringType,
+        org.apache.spark.sql.types.BinaryType, org.apache.spark.sql.types.TimestampType))
+      assert(footer.schema == want, file)
+    }
+    // imported rows read back the same as Spark's own scan of the file
+    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    RowGroupResume.importFull(spark, foreign, s"$dir/track_rows", 2, df => rows ++= df.collect())
+    assert(rows.map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).toSet ==
+      spark.read.parquet(foreign).collect().map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).toSet)
+
+    // zero row groups: no batch, and the file is complete
+    val empty = s"$dir/public-things-0-200.parquet"
+    foreignFile(empty, Nil)
+    assert(RowGroupResume.footer(spark, empty).groups.isEmpty)
+    val r = graft.sources.DirectImport.run(spark, empty, s"$dir/track_empty",
+      (_, _) => fail("no batch expected"))
+    assert(r == graft.sources.DirectImport.Result("things", "full", 0, done = true))
+  }
 }
