@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs the headline queries against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Forces full materialization through the noop sink
@@ -62,38 +62,67 @@ object Bench {
     "t14_mixture_sample", "t15_chunk_plan", "t16_vocab_top", "t17_bloom_contamination",
     "t18_gopher_rules")
 
+  /** Wall seconds to build `mk` and drain it through the noop sink — the
+    * one timed unit of Bench and `Probe ab`. Plan construction is inside
+    * the window: eager-checkpoint operators (pageRank,
+    * connectedComponents) do their work while the plan is built. A
+    * failure goes to `onFail`; the time spent up to it is still returned.
+    */
+  def timedNoop(onFail: Throwable => Unit)(mk: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try mk.write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable => onFail(e) }
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Linear-interpolated quantile of a non-empty sample; p = 0.5 is the
+    * usual median (mean of the middle pair for even counts).
+    */
+  def quantile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sorted
+    val pos = p * (s.length - 1)
+    val i = pos.toInt
+    val f = pos - i
+    if (i + 1 >= s.length) s(i) else s(i) * (1 - f) + s(i + 1) * f
+  }
+
+  /** Tail-window budget of the compact line: the bench runner keeps only the
+    * last 2,000 characters of output, and ~100 go to sbt's closing line.
+    */
+  val compactLimit = 1900
+
+  /** The compact line printed LAST, so it always lands whole in the
+    * runner's tail window: total, query count, the artifact holding the
+    * full line, the climate geomean, and `qmed` — per-query medians at 2
+    * decimals keyed by each name's prefix before the first underscore
+    * (the 129 full names alone are ~2.4 KB). It degrades instead of
+    * overflowing: on a short-key collision, or when the line would pass
+    * [[compactLimit]] chars, `qmed` gives way to a `qmed_overflow` marker
+    * naming the artifact file.
+    */
+  def compactLine(total: Double, sfDir: String, artifact: String,
+      climateGeomean: Option[Double], medians: Seq[(String, Double)]): String = {
+    val head = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir",""" +
+      s""""n_queries":${medians.length},"queries_artifact":"$artifact"""" +
+      climateGeomean.map(g => f""","climate":{"geomean":$g%.3f}""").getOrElse("")
+    val keys = medians.map(_._1.takeWhile(_ != '_'))
+    val qmed = keys.zip(medians.map(_._2))
+      .map { case (k, m) => "\"" + k + f"""\":$m%.2f""" }.mkString("{", ",", "}")
+    val line = s"""$head,"qmed":$qmed}"""
+    if (keys.distinct.length == keys.length && line.length <= compactLimit) line
+    else s"""$head,"qmed_overflow":"$artifact"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions default to thread count; decade-3+ runs (sf100,
-      // ~16 GB input) override upward so AQE has headroom to coalesce from
-      // — AQE can merge small partitions but never split an initial one
-      // except at skew joins, so the initial count is the scale ceiling
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // split sizing lives in SparkEntry.prep (compute-proportional — see
-      // the scaladoc there); prep's conf.set overrides builder values
-      // at bench scale the mid-size dims (orders, customer, part) are
-      // tens of MB — hash-joining them scan-side beats a shuffle; on a
-      // real cluster AQE makes the same call from runtime sizes
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // default 100-entry codegen cache evicts across a 29-query × 3-pass
-      // suite, recompiling every generated class each pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prep(spark)
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession(cpus)
 
     val qs = SparkEntry.queries
     def once(name: String, pass: Int): Double = {
-      val t0 = System.nanoTime()
-      try qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = timedNoop(e => System.err.println(s"[bench] $name failed: $e")) {
+        qs(name)(spark, sfDir)
+      }
       System.err.println(f"[bench] pass$pass $name $dt%.2fs")
       dt
     }
@@ -110,8 +139,9 @@ object Bench {
     if (warmDir.isDirectory) {
       val t0 = System.nanoTime()
       names.foreach { n =>
-        try qs(n)(spark, warmDir.toString).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] warmup $n failed: $e") }
+        timedNoop(e => System.err.println(s"[bench] warmup $n failed: $e")) {
+          qs(n)(spark, warmDir.toString)
+        }
       }
       System.err.println(f"[bench] warmup pass ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
@@ -149,10 +179,7 @@ object Bench {
         best = math.min(best, t)
       }
     }
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
+    def med(xs: Seq[Double]): Double = quantile(xs, 0.5)
     val results = names.map(n => n -> samples(n).min)
     val qJson = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
@@ -174,7 +201,7 @@ object Bench {
     // only mean something against a near-1.0 climate. sf-dependent: the
     // controls are sf0.1 minima, so the stamp only emits on sf0.1 runs.
     val resultMap = results.toMap
-    val climate: Option[String] =
+    val climate: Option[(Double, String)] =
       if (!sfDir.endsWith("sf0.1")) None
       else try {
         val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_CONTROLS.json"))
@@ -195,7 +222,7 @@ object Bench {
         else {
           val geo = math.exp(ratios.map(r => math.log(r._2)).sum / ratios.size)
           val per = ratios.map { case (k, r) => "\"" + k + f"""\":$r%.2f""" }.mkString("{", ",", "}")
-          Some(f"""{"geomean":$geo%.3f,"controls":$per,"baseline":"BENCH_CONTROLS.json"}""")
+          Some(geo -> f"""{"geomean":$geo%.3f,"controls":$per,"baseline":"BENCH_CONTROLS.json"}""")
         }
       } catch { case _: Exception => None }
     // the run's ACTUAL knobs, in-artifact (ADVICE r11: the sf100 probe ran
@@ -210,7 +237,7 @@ object Bench {
       s"untimed sf0.001 warmup; $passes interleaved full passes; " +
       s">${outlierSec}s outliers re-sampled until 2 consecutive samples within 10% of best (max +6); " +
       "queries=per-query min over all samples; stats=per-query n/min/med/max"
-    val climateField = climate.map(c => s""","climate":$c""").getOrElse("")
+    val climateField = climate.map(c => s""","climate":${c._2}""").getOrElse("")
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","protocol":"$protocol","config":$config$climateField,"queries":$qJson,"stats":$sJson,"sf":"$sfDir"}"""
     println(line)
@@ -228,34 +255,10 @@ object Bench {
     // The full line above is ~6 KB — longer than the driver's 2,000-char
     // tail window, so its `parsed` field came up null every round (the
     // window holds only the line's end). Print a SECOND, compact line
-    // LAST: it fits whole in the tail, so a parser scanning it always
-    // finds at least this one. r19 (VERDICT r18 item 2): the compact line
-    // now carries the PER-QUERY MEDIANS — two consecutive rounds of
-    // PERF_r{N} had n_common 0 because no per-query data survived the
-    // tail. The 129 full query names alone are ~2.4 KB (cannot ever fit
-    // 2,000 chars), so `qmed` keys are each query's UNIQUE prefix before
-    // the first underscore (q01..q81/d01../s01../m01../t01..; collisions
-    // would fall back to full names), values are medians over all samples
-    // at 2 decimals. Full names + 3-decimal min/med/max stay in the first
-    // line and in `outPath` (committed as BENCH_LOCAL.json); the former
-    // `slowest`/`config` fields of this line moved there too — the total
-    // line stays ~1.8 KB so the whole object survives any ≥2 KB tail.
-    val shortKeys: Map[String, String] = {
-      val pref = names.map(n => n -> n.takeWhile(_ != '_')).toMap
-      if (pref.values.toSeq.distinct.length == names.length) pref
-      else names.map(n => n -> n).toMap
-    }
-    val qmed = names.map { n =>
-      "\"" + shortKeys(n) + f"""\":${med(samples(n).toSeq)}%.2f"""
-    }.mkString("{", ",", "}")
-    val climateGeo = climate.map { c =>
-      // re-extract only the geomean for the compact line
-      val m = """"geomean":([0-9.]+)""".r.findFirstMatchIn(c).map(_.group(1))
-      m.map(g => s""","climate":{"geomean":$g}""").getOrElse("")
-    }.getOrElse("")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir",""" +
-      s""""n_queries":${results.length},"queries_artifact":"$outPath"""" +
-      s"""$climateGeo,"qmed":$qmed}""")
+    // LAST (see compactLine): it fits whole in the tail, and its per-query
+    // medians let PERF_r{N} compare queries round over round.
+    println(compactLine(total, sfDir, outPath, climate.map(_._1),
+      names.map(n => n -> med(samples(n).toSeq))))
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -31,18 +30,8 @@ object Verify {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, c) => (a, b, Some(c.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // big-SF runs (sf100/sf200 probes) need more reduce-side parallelism
-      // than local core count; same env contract as Bench/BroadcastProbe
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prep(spark)
+    // Bench's session: the oracle checks the join strategies that are timed
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     var dumpFailures = 0
     SparkEntry.queries

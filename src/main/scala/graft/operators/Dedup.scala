@@ -87,11 +87,12 @@ object Dedup {
     // the label trajectory is (jump∘hop)^2k, identical to the sequential
     // form at every hop count, so labels match the r18 implementation
     // bit-for-bit even when maxIter cuts the loop off unconverged
-    // (spec-asserted against [[connectedComponentsSeq]]). Convergence is
-    // checked against the PAIR input (`prev` rides through both hops);
-    // every step is pointwise non-increasing, so pair-output = pair-input
-    // ⟺ both hops were no-ops — the sequential loop's exit decision is
-    // never missed, at worst one already-converged hop runs extra.
+    // (spec-asserted against the sequential loop in the test sources).
+    // Convergence is checked against the PAIR input (`prev` rides through
+    // both hops); every step is pointwise non-increasing, so pair-output =
+    // pair-input ⟺ both hops were no-ops — the sequential loop's exit
+    // decision is never missed, at worst one already-converged hop runs
+    // extra.
     while (!converged && iter < maxIter) {
       val lazies = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       // one hop over (node, label[, prev]): each node takes min(own label,
@@ -141,62 +142,6 @@ object Dedup {
       prevCkpt = next
       labels = next.select(col("node"), col("label"))
       iter += hops
-    }
-    release(sym)
-    labels.select(col("node").as("node_id"), col("label").as("cluster_id"))
-  }
-
-  /** The r18 sequential (one hop per materialization) loop, retained as
-    * the paired form's equality reference — never planned by queries.
-    * Identical sym construction; per iteration: neighbor-min + pointer
-    * jump, eager checkpoint, convergence action.
-    */
-  private[graft] def connectedComponentsSeq(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ic = IterCkpt(pairs, checkpointDir)
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame = ic(df, eager)
-    def release(df: DataFrame): Unit = ic.release(df)
-    val p = ckpt(pairs
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")), true)
-    val sym = ckpt(p
-      .union(p.select(col("v").as("u"), col("u").as("v")))
-      .union(p.select(col("u"), col("u").as("v")))
-      .union(p.select(col("v").as("u"), col("v")))
-      .distinct()
-      .repartition(col("v")), true)
-    release(p)
-    var labels = ckpt(sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u").as("node"), col("mn").as("label")), true)
-    var iter = 0
-    var converged = false
-    var prevCkpt = labels
-    while (!converged && iter < maxIter) {
-      val propagated = sym
-        .join(labels.withColumnRenamed("node", "v").withColumnRenamed("label", "vlab"), Seq("v"))
-        .groupBy(col("u").as("node"))
-        .agg(
-          min(col("vlab")).as("label"),
-          max(when(col("v") === col("u"), col("vlab"))).as("prev"))
-        .transform(d => ckpt(d, false))
-      val next = propagated
-        .join(
-          propagated.select(col("node").as("label"), col("label").as("ll")),
-          Seq("label"), "left")
-        .select(
-          col("node"),
-          coalesce(col("ll"), col("label")).as("label"),
-          (coalesce(col("ll"), col("label")) =!= col("prev")).as("changed"))
-        .transform(d => ckpt(d, true))
-      converged = next.where(col("changed")).isEmpty
-      release(propagated)
-      release(prevCkpt)
-      prevCkpt = next
-      labels = next.select(col("node"), col("label"))
-      iter += 1
     }
     release(sym)
     labels.select(col("node").as("node_id"), col("label").as("cluster_id"))
@@ -829,7 +774,7 @@ object Dedup {
     * the containment wins outright: eps=2.0 (everything kept) reads d14
     * 7.25 s vs d15 5.82 s at sf10; at sf100 d15 measures 589 s while
     * d14's probe volume is Σ|cell|²/2 ≈ 7.8e11 pairs — 41× d15's, ~6.6 h
-    * at the measured pair rate (see [[graft.DedupRegimeProbe]]; all
+    * at the measured pair rate (see `Probe regime`; all
     * readings in BENCH_SF100.json `d15_lloyd_quantizer_r15`).
     *
     * Mechanics, all driver-bounded and oracle-mirrorable:
@@ -863,7 +808,7 @@ object Dedup {
     * n, cells_used). Σ|cell|² is the cell-local prune's worst-case pair
     * volume — THE scale exposure the d15 training exists to contain — so
     * the number that grades quantizers must come from one shared,
-    * spec-pinned implementation (used by [[graft.DedupRegimeProbe]] and
+    * spec-pinned implementation (used by `Probe regime` and
     * QueriesSpec). Computed in decimal(38,0): a product of two counts is
     * the audit's span-growing class (OverflowAudit shape 3) and the
     * instrument itself must not wrap at any N.

@@ -69,7 +69,7 @@ import graft.Tables
   *  - class (2): no member — Binning's rn/ntile and q14/q26/q54's ranks
   *    gate or select rows; no registered aggregate sums a rank.
   *  - class (3): q68's `value4 · n_parts` — audited (`gate_cross_mult`);
-  *    its registered escape is q72's decimal form. (The DedupRegimeProbe
+  *    its registered escape is q72's decimal form. (The `Probe regime`
   *    instrument's Σ|cell|² is the same class and computes in
   *    decimal(38,0) for the same reason.)
   *  - class (4): no member — Binning/Sampling's cumulative offsets

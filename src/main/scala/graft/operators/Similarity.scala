@@ -66,16 +66,6 @@ object Similarity {
   def hyperplaneSig(v: Column, bits: Int, dim: Int): Column =
     VectorExprs.hyperplaneSigFL(v, hyperplanes(bits, dim).map(_.toArray).toArray)
 
-  /** The unrolled expression tree [[hyperplaneSig]] replaced — kept as the
-    * spec's equality reference (never planned by queries).
-    */
-  private[graft] def hyperplaneSigUnrolled(v: Column, bits: Int, dim: Int): Column = {
-    val planes = hyperplanes(bits, dim)
-    (0 until bits)
-      .map(j => when(VectorExprs.dotFF(v, typedlit(planes(j))) >= lit(0.0), lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-  }
-
   /** Exact top-k cosine neighbors for each query vector (brute force).
     * `queries` must be small enough to broadcast.
     * Output: (q_id, neighbor_id, cos, rank).

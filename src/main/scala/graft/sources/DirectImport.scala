@@ -10,7 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * through the standard row-group import loop with tracking and optional
   * row filters (direct_import.py:22-105 → db.py import_parquet). Here the
   * same composition is [[ExportCatalog.parseName]] →
-  * [[RowGroupResume.importFile]] (row-group batches, crash-resumable
+  * [[RowGroupResume.importFull]] (row-group batches, crash-resumable
   * markers) → the caller's sink, with an optional
   * [[graft.operators.RowFilter]] predicate applied per batch before
   * delivery (the reference's `row_filters`, which its CLI TODO-stubs).
@@ -44,7 +44,7 @@ object DirectImport {
 
     val deliver: DataFrame => Unit = df =>
       sink(parsed.tableName, rowFilter.map(df.where).getOrElse(df))
-    val r = RowGroupResume.importFile(
+    val r = RowGroupResume.importFull(
       spark, parquetFile, trackingDir, groupsPerBatch, deliver, shouldStop)
     Result(parsed.tableName, fileType, r.batches, r.done)
   }

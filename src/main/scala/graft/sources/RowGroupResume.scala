@@ -145,7 +145,9 @@ object RowGroupResume {
 
   /** Import `file` into `sink` in row-group-aligned batches of
     * `groupsPerBatch`, resuming after the last recorded batch. Returns the
-    * number of batches actually imported this invocation.
+    * batches imported this invocation and the progress they leave behind —
+    * derived from the footer and marker listing the import already read,
+    * so asking "is the file done?" costs no second footer open.
     *
     * `shouldStop` is the reference's graceful-shutdown check
     * (`SHUTDOWN_EVENT` polled between steps, `db.py:54-56`
@@ -156,19 +158,6 @@ object RowGroupResume {
     * injectable `sleepMs`.
     */
   def importFull(
-      spark: SparkSession,
-      file: String,
-      trackingDir: String,
-      groupsPerBatch: Int,
-      sink: DataFrame => Unit,
-      shouldStop: () => Boolean = () => false): Int =
-    importFile(spark, file, trackingDir, groupsPerBatch, sink, shouldStop).batches
-
-  /** [[importFull]], also reporting the progress it leaves behind — derived
-    * from the footer and marker listing the import already read, so asking
-    * "is the file done?" costs no second footer open.
-    */
-  def importFile(
       spark: SparkSession,
       file: String,
       trackingDir: String,
@@ -192,15 +181,5 @@ object RowGroupResume {
       imported += 1
     }
     Imported(imported, last, footer.groups.size)
-  }
-
-  /** `(resume point, total groups)` — the reference's
-    * `(last_row_group_imported, total_row_groups)` tracking row; a full is
-    * "actually completed" when they meet (db.py:246-250).
-    */
-  def progress(spark: SparkSession, trackingDir: String, file: String): (Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(trackingDir).getFileSystem(conf)
-    (lastImported(fs, trackingDir, file), rowGroups(conf, file).size)
   }
 }

@@ -291,7 +291,7 @@ class DedupSimilaritySpec extends SparkSpec {
       Seq((100L, 101L), (101L, 102L), (200L, 201L))).toSeq
     for ((g, mi) <- Seq((chain, 4), (chain, 20), (mixed, 20), (mixed, 2),
         (chain, 3), (chain, 5), (mixed, 1))) {
-      val seq = run(Dedup.connectedComponentsSeq, g, mi)
+      val seq = run(Reference.connectedComponentsSeq, g, mi)
       val par = run(Dedup.connectedComponents, g, mi)
       assert(par == seq, s"graph=${g.take(2)}... maxIter=$mi")
     }

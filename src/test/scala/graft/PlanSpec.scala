@@ -593,7 +593,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("BroadcastAudit readings agree with this spec's own guard semantics") {
-    // the decade-2 probe (graft.BroadcastProbe, wired at sf10 in the bench
+    // the decade-2 probe (`graft.Probe broadcast`, wired at sf10 in the bench
     // chain) reads executed BroadcastExchange dataSize through
     // plans/BroadcastAudit — pin its reader against the same plans the
     // static-broadcast guard above classifies, so the two can never drift:

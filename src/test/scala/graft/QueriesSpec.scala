@@ -238,7 +238,7 @@ class QueriesSpec extends SparkSpec {
       s"d15 magnet cell: max|cell| = $maxCell of $n (bound $bound, k=$k) — " +
         "the trained quantizer lost its containment property")
     // pin the cells INSTRUMENT (Dedup.cellStats, the number that grades
-    // quantizers in BENCH_LLOYD_ROUNDS/DedupRegimeProbe) against this
+    // quantizers in BENCH_LLOYD_ROUNDS/`Probe regime`) against this
     // independent driver-side recount of the same assignment
     val (sumsq, mx, nStat, kUsed) = operators.Dedup.cellStats(
       operators.Dedup.lloydAssignment(
@@ -691,7 +691,7 @@ class QueriesSpec extends SparkSpec {
       spark.conf.set(key, codegen)
       val out = df.select(col("id"),
         graft.operators.Similarity.hyperplaneSig(col("v"), 64, 64).as("fused"),
-        graft.operators.Similarity.hyperplaneSigUnrolled(col("v"), 64, 64).as("unrolled"))
+        Reference.hyperplaneSigUnrolled(col("v"), 64, 64).as("unrolled"))
         .collect()
       assert(out.length == 53)
       out.foreach { r =>

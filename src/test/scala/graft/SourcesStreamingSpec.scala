@@ -292,7 +292,7 @@ class SourcesStreamingSpec extends SparkSpec {
     // one-shot baseline
     val oneShot = scala.collection.mutable.Set[Long]()
     val b0 = RowGroupResume.importFull(spark, file, s"$root/track_oneshot", 2,
-      df => { oneShot ++= ids(df); () })
+      df => { oneShot ++= ids(df); () }).batches
     assert(b0 == (groups.size + 1) / 2)
     assert(oneShot.toSet == (0L until 10000L).toSet)
 
@@ -316,27 +316,28 @@ class SourcesStreamingSpec extends SparkSpec {
     // re-recording an already-recorded marker (crash-replay) is a no-op
     RowGroupResume.recordProgress(fs, s"$root/track", file, 3)
     assert(RowGroupResume.lastImported(fs, s"$root/track", file) == 3)
-    val (resumeAt, total) = RowGroupResume.progress(spark, s"$root/track", file)
-    assert(resumeAt == 3 && total == groups.size)
+    // the reference's (last_row_group_imported, total_row_groups) tracking row
+    assert(RowGroupResume.rowGroups(conf, file).size == groups.size)
 
     // resume: only the remaining batches are re-delivered
     val afterResume = scala.collection.mutable.Set[Long]()
-    val b2 = RowGroupResume.importFull(spark, file, s"$root/track", 2,
+    val r2 = RowGroupResume.importFull(spark, file, s"$root/track", 2,
       df => { afterResume ++= ids(df); () })
-    assert(b2 == b0 - 2)
+    assert(r2.batches == b0 - 2)
+    assert(r2.lastImported == groups.size - 1 && r2.totalGroups == groups.size && r2.done)
     assert(beforeCrash.intersect(afterResume).isEmpty, "resume must not replay committed batches")
     assert(beforeCrash.toSet ++ afterResume.toSet == oneShot.toSet,
       "crash + resume must equal the one-shot import exactly")
     // fully imported → nothing left
     assert(RowGroupResume.importFull(spark, file, s"$root/track", 2,
-      _ => fail("no batch expected")) == 0)
+      _ => fail("no batch expected")).batches == 0)
 
     // graceful shutdown: stop lands on a batch boundary, resume completes
     val stopped = scala.collection.mutable.Set[Long]()
     var delivered = 0
     val b3 = RowGroupResume.importFull(spark, file, s"$root/track_stop", 2,
       df => { stopped ++= ids(df); delivered += 1 },
-      shouldStop = () => delivered >= 2)
+      shouldStop = () => delivered >= 2).batches
     assert(b3 == 2, "stop must land after the second batch")
     val rest = scala.collection.mutable.Set[Long]()
     RowGroupResume.importFull(spark, file, s"$root/track_stop", 2,
@@ -489,7 +490,7 @@ class SourcesStreamingSpec extends SparkSpec {
       val root = Files.createTempDirectory("graft-rgmember").toFile.getAbsolutePath
       val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
       assert(RowGroupResume.importFull(spark, file, s"$root/track", gpb,
-        df => got += df.select("id").as[Long].collect().toSeq) == (groups.size + gpb - 1) / gpb)
+        df => got += df.select("id").as[Long].collect().toSeq).batches == (groups.size + gpb - 1) / gpb)
       groups.grouped(gpb).toSeq.zip(got).foreach { case (batch, ids) =>
         val from = batch.head.firstRowIndex
         val until = batch.last.firstRowIndex + batch.last.rows

@@ -6,16 +6,12 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for all specs. */
 object TestSession {
+  val cpus = 4
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's and Verify's session, pinned to 4 threads
+    val s = GraftSession(cpus)
     s.sparkContext.setLogLevel("ERROR")
-    SparkEntry.prep(s)
+    s
   }
   val sfDir = "/root/testdata/sf0.001"
   // one SF up — for pins that are vacuous on a query that selects no rows

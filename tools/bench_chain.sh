@@ -54,7 +54,7 @@ echo "=== STAGE sf10 broadcast built-size probe (VERDICT r12/r13 task 3) $(date)
 # the chain would publish a breached artifact and keep going). Capture,
 # then extract, then check BOTH the sbt status and the breaches field.
 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=64g SPARK_GRAFT_SHUFFLE_PARTITIONS=64 \
-  sbt -batch "runMain graft.BroadcastProbe /root/repo/testdata/sf10" \
+  sbt -batch "runMain graft.Probe broadcast testdata/sf10" \
   > /tmp/broadcast_probe_sf10.log 2>&1
 PROBE_RC=$?
 grep -E '^\{"metric":"broadcast_built_bytes"' /tmp/broadcast_probe_sf10.log \

@@ -103,7 +103,7 @@ echo "=== STAGE sf100 broadcast built-size probe (decade-3 reading, r15) $(date)
 # threshold). BENCH_SF100_BROADCAST.json documents the exclusion.
 rm -rf /dev/shm/spark-local*
 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
-  sbt -batch "runMain graft.BroadcastProbe /root/repo/testdata/sf100 s02_ann_lsh,s05_range_search,m07_frame_neardup" \
+  sbt -batch "runMain graft.Probe broadcast testdata/sf100 s02_ann_lsh,s05_range_search,m07_frame_neardup" \
   > /tmp/broadcast_sf100.log 2>&1
 BRC=$?
 BCODE=$(grep -oE 'Nonzero exit code returned from runner: [0-9]+' /tmp/broadcast_sf100.log | grep -oE '[0-9]+$' | head -1)
