@@ -944,7 +944,7 @@ object SparkEntry {
       // production-k SemDeDup: k = max(16, N/125) — the IVF sizing rule
       // (s03/s10) applied to the dedup quantizer, so cells stay ~125
       // vectors and the cell-local cost scales LINEARLY with N. The
-      // quantizer is a TWO-LEVEL broadcast-table argmax (coarse √k group
+      // quantizer is a TWO-LEVEL fused-kernel argmax (coarse √k group
       // leaders, then the chosen group's cells): flat N·k assignment is
       // N²/125 cosines when k ∝ N — measured ~100×/decade at sf10 —
       // while two-level is N·2√k, restoring a row-linear decade ratio.

@@ -323,10 +323,13 @@ case class PqSegBest(
   * min(hi, |matrix|)). If that window is EMPTY — lo ≥ hi, lo past the
   * matrix, or hi ≤ 0 — the kernel visits no candidate and returns NULL
   * rather than silently yielding `lo` as a fabricated (possibly
-  * out-of-range) winner. Current call sites (semanticDedupScaled's
-  * two-level descent) construct provably non-empty windows, so a null
-  * here means a caller bug — and surfaces as one instead of as a wrong
-  * cell id.
+  * out-of-range) winner. Every call site constructs a provably non-empty
+  * window, so a null here means a null vector or a caller bug — and
+  * surfaces as one instead of as a wrong cell id. The call sites are the
+  * flat corpus-side cell assignment `Similarity.assignCell` (s03, s10,
+  * s12, d11, d13; window [0, k), with the null-vector row coalesced to
+  * cell k−1) and the two-level descent `Similarity.twoLevelAssign` (d14,
+  * d15).
   */
 case class ArgmaxCosStride(
     vec: Expression,

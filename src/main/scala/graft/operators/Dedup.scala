@@ -580,9 +580,10 @@ object Dedup {
     * d01 rule — the paper keeps one member per within-cluster duplicate
     * set). Output: one row per vector with its cell and keep flag.
     *
-    * Scale shape: the cluster assignment is a pure scan (fused cosine
-    * kernels against broadcast centroid literals — the s03 coarse
-    * quantizer), and the pairwise pass is cell-LOCAL: the self-join
+    * Scale shape: the cluster assignment is a pure scan
+    * ([[Similarity.assignCell]], the s03 coarse quantizer: one fused
+    * argmax-cosine loop per row over the driver-side centroid matrix),
+    * and the pairwise pass is cell-LOCAL: the self-join
     * shuffles on the cell key only, so the quadratic cost is bounded by
     * the largest cell, never N². That containment is SemDeDup's entire
     * reason to exist — at production scale the quantizer has ~10⁵ cells
@@ -597,35 +598,9 @@ object Dedup {
       eps: Double,
       nCentroids: Int = 16,
       trained: Option[Seq[Seq[Float]]] = None): DataFrame = {
-    import graft.expressions.VectorExprs
-    // lowest-id stand-in quantizer by default (oracle-checkable); pass
-    // Similarity.kmeansCentroidVectors for a trained one
-    val centroids: Array[(Long, Seq[Float])] = trained match {
-      case Some(cs) => cs.zipWithIndex.map { case (v, i) => i.toLong -> v }.toArray
-      case None => corpus
-        .select(col(idCol).cast("long"), col(vecCol))
-        .orderBy(col(idCol).cast("long").asc)
-        .limit(nCentroids)
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq)
-    }
-    // argmax by (cos, cid) struct ordering — no window, no shuffle (s03).
-    // r19: literal centroid norms + one per-row norm (bit-identical; the
-    // ivfTopK pattern) — the k-way score array pays one dot loop per cell
-    val cnorm: Array[Double] = centroids.map { case (_, cv) =>
-      math.sqrt(cv.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-    }
-    def cellScores(v: org.apache.spark.sql.Column, vn: org.apache.spark.sql.Column) =
-      array(centroids.zipWithIndex.map {
-        case ((_, cv), ci) =>
-          struct(Similarity.cosinePre(v, typedlit(cv), vn, lit(cnorm(ci))).as("cos"),
-            lit(ci.toLong).as("cid"))
-      }: _*)
-    val assign = corpus.select(
-        col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"),
-        Similarity.norm(col(vecCol)).as("_vn"))
-      .select(col("vec_id"), col("v"),
-        array_max(cellScores(col("v"), col("_vn"))).getField("cid").as("cell"))
+    val centroids = Similarity.model(corpus, idCol, vecCol, nCentroids, trained)
+    val assign = corpus.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"),
+      Similarity.assignCell(col(vecCol), centroids).as("cell"))
     semanticDedupFromAssign(assign, eps)
   }
 
@@ -637,11 +612,11 @@ object Dedup {
     * growing ~N²/k; this is the configuration a 100 TB corpus actually
     * runs (the ~10⁵-cell note in [[semanticDedup]]'s scaladoc, mechanized).
     *
-    * The quantizer changes shape with k: literal-unrolled cosine kernels
-    * (one expression per centroid) stop at ~10² centroids — Janino's 64 KB
-    * method ceiling and analysis cost both blow up — so the scaled path
-    * assigns cells with ONE fused codegen kernel per level
-    * ([[graft.expressions.ArgmaxCosStride]]): the centroid matrix rides
+    * Cells are assigned with ONE fused codegen kernel per level
+    * ([[graft.expressions.ArgmaxCosStride]], the kernel behind every
+    * cell assignment here — see [[Similarity.assignCell]]; literal-unrolled
+    * cosine trees stop at ~10² centroids, where Janino's 64 KB method
+    * ceiling and analysis cost both blow up): the centroid matrix rides
     * along as a reference object (the [[graft.expressions.PqSegBest]]
     * idiom) and each row scores its candidates in a generated loop inside
     * its own projection. The broadcast-join + grouped-struct-max form this
@@ -649,8 +624,8 @@ object Dedup {
     * through two hash aggregates — 500M rows / 386 s at sf100, a ~2.3×
     * constant over the work model that the kernel deletes outright. The
     * kernel's cosine and its (cos DESC, cid DESC) tie-break are
-    * bit-compatible with the struct ordering the literal path uses
-    * (spec-pinned against the join form).
+    * bit-compatible with the struct-max ordering the oracles use
+    * (spec-pinned against the struct-max form).
     *
     * The assignment is TWO-LEVEL (the IVF coarse/fine quantizer, applied
     * to the quantizer itself): cells 0..k-1 partition into ⌈k/gs⌉
@@ -708,33 +683,12 @@ object Dedup {
       vecCol: String,
       rowsPerCell: Int = 125,
       minCells: Int = 16): DataFrame = {
-    import graft.expressions.VectorExprs
     val n = corpus.count()
     val k = math.max(minCells.toLong, n / rowsPerCell).toInt
-    val coarse = math.ceil(math.sqrt(k.toDouble)).toInt
-    val gs = (k + coarse - 1) / coarse // cells per group, ceil(k/coarse)
-    // lowest-id stand-in centroids as a driver-side MODEL (the s08/s09
-    // codebook idiom): a bounded orderBy(id).limit(k) read, row index =
-    // cid (0-based rank by id). k·dim floats — 4 MB at sf100's k=16e3,
-    // the same scale envelope the broadcast-table form had.
-    val matrix: Array[Array[Float]] = corpus
-      .select(col(idCol).cast("long").as("cid0"), col(vecCol).as("cv"))
-      .orderBy(col("cid0").asc)
-      .limit(k)
-      .collect()
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Float](1).toArray)
-    // level 1: argmax over the group leaders (cells at cid ≡ 0 mod gs —
-    // one strided pass); level 2: argmax over the chosen group's
-    // contiguous cells [leader, leader+gs) ∩ [0, k). Both in the row's
-    // own projection: no joins, no aggregates, no intermediate rows.
-    val vecs = corpus.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
-    vecs
-      .withColumn("lr", VectorExprs.argmaxCosStride(
-        col("v"), lit(0L), lit(k.toLong), gs, matrix))
-      .withColumn("cell", VectorExprs.argmaxCosStride(
-        col("v"), col("lr"), least(col("lr") + lit(gs.toLong), lit(k.toLong)), 1, matrix))
-      .select(col("vec_id"), col("v"), col("cell"))
+    // k·dim stand-in floats — 4 MB at sf100's k=16e3
+    Similarity.twoLevelAssign(
+      corpus.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v")),
+      k, Similarity.model(corpus, idCol, vecCol, k))
   }
 
   /** THE PRODUCTION SemDeDup-at-k ENTRY POINT (d15): [[semanticDedupScaled]]
@@ -843,8 +797,6 @@ object Dedup {
       .localCheckpoint(true)
     val n = base.count()
     val k = math.max(minCells.toLong, n / rowsPerCell).toInt
-    val coarse = math.ceil(math.sqrt(k.toDouble)).toInt
-    val gs = (k + coarse - 1) / coarse
     // r19: fused array kernel, not the per-element interpreted transform
     // lambda — this expression runs once per corpus row PER LLOYD ROUND
     // (element-identical by the ScaleRoundFL/MoneyRound contract)
@@ -873,15 +825,8 @@ object Dedup {
     var matrix: Array[Array[Float]] = init.map(_.getSeq[Float](1).toArray)
     val kEff = matrix.length // corpus smaller than k: windows clamp (d14)
 
-    def assignTo(m: Array[Array[Float]]): DataFrame = base
-      .withColumn("lr", VectorExprs.argmaxCosStride(
-        col("v"), lit(0L), lit(k.toLong), gs, m))
-      .withColumn("cell", VectorExprs.argmaxCosStride(
-        col("v"), col("lr"), least(col("lr") + lit(gs.toLong), lit(k.toLong)), 1, m))
-      .select(col("vec_id"), col("v"), col("cell"))
-
     for (_ <- 1 to lloydRounds) {
-      val upd = assignTo(matrix)
+      val upd = Similarity.twoLevelAssign(base, k, matrix)
         .select(col("cell"), posexplode(x6).as(Seq("dim", "x6")))
         .groupBy(col("cell"), col("dim"))
         .agg(sum(col("x6")).as("sum6"), count(lit(1)).as("cnt"))
@@ -901,13 +846,15 @@ object Dedup {
       }
       matrix = c6.map(_.map(l => (l.toDouble / 1e6).toFloat))
     }
-    assignTo(matrix)
+    Similarity.twoLevelAssign(base, k, matrix)
   }
 
   /** The SemDeDup prune over a precomputed (vec_id, v, cell) assignment:
     * checkpoint once, cell-local LEFT SEMI probe, vector-free roster.
-    * Shared by the literal-kernel quantizer ([[semanticDedup]]) and the
-    * broadcast-table quantizer ([[semanticDedupScaled]]).
+    * Shared by the flat quantizer ([[semanticDedup]],
+    * [[Similarity.assignCell]]) and the two-level ones
+    * ([[semanticDedupScaled]], [[semanticDedupLloyd]],
+    * [[Similarity.twoLevelAssign]]).
     *
     * localCheckpoint pins ONE quantizer evaluation for all three consumers
     * (probe, build, roster). The r8 design (repartition(cell) + two-sided

@@ -45,6 +45,73 @@ object Similarity {
       .when(na === lit(0.0) || nb === lit(0.0), lit(0.0))
       .otherwise(VectorExprs.dotFF(a, b) / (na * nb))
 
+  /** The `n` lowest-id vectors of `corpus`, sorted by id (row index = cid,
+    * the 0-based rank by id) — the deterministic stand-in every quantizer
+    * here defaults to (PQ codebooks, IVF and SemDeDup centroids), which
+    * keeps the operators oracle-checkable. A bounded model read (n·dim
+    * floats), never data. `trained` (e.g. [[kmeansCentroidVectors]])
+    * replaces the stand-in outright.
+    */
+  def model(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      n: Int,
+      trained: Option[Seq[Seq[Float]]] = None): Array[Array[Float]] =
+    trained.map(_.map(_.toArray).toArray).getOrElse(corpus
+      .select(col(idCol).cast("long").as("_id"), col(vecCol))
+      .orderBy(col("_id").asc)
+      .limit(n)
+      .collect()
+      .map(_.getSeq[Float](1).toArray))
+
+  /** The corpus-side cell: argmax over `matrix` rows of cosine(v, row),
+    * ties to the higher row — the (cos DESC, cid DESC) order the IVF and
+    * SemDeDup oracles use — as ONE fused
+    * [[graft.expressions.ArgmaxCosStride]] loop per row (norms hoisted,
+    * bit-identical to cosineFF).
+    *
+    * The `coalesce` does two jobs. It keeps the null-vector convention of
+    * the oracles (every cosine null, so the cid tie breaks high and the
+    * vector lands in cell k−1), where the bare kernel returns null. And it
+    * makes `cell` non-nullable, so the `isnotnull(cell)` a join on it
+    * infers folds away instead of dragging the kernel under a Filter that
+    * evaluates it a second time per row.
+    */
+  def assignCell(v: Column, matrix: Array[Array[Float]]): Column = {
+    val k = matrix.length.toLong
+    coalesce(VectorExprs.argmaxCosStride(v, lit(0L), lit(k), 1, matrix), lit(k - 1))
+  }
+
+  /** The `nProbe` cells nearest `v` as array<long>, best first, in the
+    * same (cos DESC, cid DESC) order as [[assignCell]]. A k-way cosine
+    * struct array sorted per row — meant for the small query side only
+    * (the corpus side is [[assignCell]]).
+    */
+  def probeCells(v: Column, matrix: Array[Array[Float]], nProbe: Int): Column =
+    slice(reverse(array_sort(array(matrix.zipWithIndex.map { case (c, ci) =>
+      struct(cosine(v, typedlit(c.toSeq)).as("cos"), lit(ci.toLong).as("cid"))
+    }: _*))), 1, nProbe).getField("cid")
+
+  /** Two-level cell assignment (see [[graft.operators.Dedup.semanticDedupScaled]]):
+    * (vec_id, v) → (vec_id, v, cell). Level 1 argmaxes over the group
+    * leaders (cells at cid ≡ 0 mod gs — one strided pass), level 2 over
+    * the chosen group's contiguous cells [leader, leader+gs) ∩ [0, k).
+    * Both run in the row's own projection: no joins, no aggregates, no
+    * intermediate rows.
+    */
+  private[graft] def twoLevelAssign(
+      vecs: DataFrame, k: Int, matrix: Array[Array[Float]]): DataFrame = {
+    val coarse = math.ceil(math.sqrt(k.toDouble)).toInt
+    val gs = (k + coarse - 1) / coarse // cells per group, ceil(k/coarse)
+    vecs
+      .withColumn("lr", VectorExprs.argmaxCosStride(
+        col("v"), lit(0L), lit(k.toLong), gs, matrix))
+      .withColumn("cell", VectorExprs.argmaxCosStride(
+        col("v"), col("lr"), least(col("lr") + lit(gs.toLong), lit(k.toLong)), 1, matrix))
+      .select(col("vec_id"), col("v"), col("cell"))
+  }
+
   /** The deterministic ±1 hyperplanes behind [[hyperplaneSig]] — public so
     * the SQL oracle generator embeds the IDENTICAL planes (one definition,
     * or the engine and its oracle could silently diverge).
@@ -197,18 +264,13 @@ object Similarity {
       nCodes: Int = 16): DataFrame = {
     require(dim % nSeg == 0, s"dim $dim must split into $nSeg segments")
     val segDim = dim / nSeg
-    val codewords: Array[Seq[Float]] = corpus
-      .select(col(idCol).cast("long"), col(vecCol))
-      .orderBy(col(idCol).cast("long").asc)
-      .limit(nCodes)
-      .collect()
-      .map(_.getSeq[Float](1).toSeq)
+    val codewords = model(corpus, idCol, vecCol, nCodes)
     // ONE fused kernel evaluation per vector: all-segment argmin + segment
     // norms from PqSegBest (the unrolled slice/dotFF/array_min tree blew
     // Janino's 64 KB method limit and silently de-codegen'd the whole
     // stage — see the PqSegBest scaladoc); posexplode its array directly,
     // so seg indices and struct fields land exactly as before
-    val best = VectorExprs.pqSegBest(col(vecCol), codewords, nSeg, segDim)
+    val best = VectorExprs.pqSegBest(col(vecCol), codewords.map(_.toSeq), nSeg, segDim)
     corpus
       .select(col(idCol).cast("long").as("vec_id"),
         posexplode(best).as(Seq("seg", "b")))
@@ -221,11 +283,47 @@ object Similarity {
     * and [[ivfPqSearch]] all assign codes through this one definition.
     */
   private def segCodes(
-      vecCol: Column, codewords: Array[Seq[Float]],
+      vecCol: Column, codewords: Array[Array[Float]],
       nSeg: Int, segDim: Int): Column = {
-    val best = VectorExprs.pqSegBest(vecCol, codewords, nSeg, segDim)
+    val best = VectorExprs.pqSegBest(vecCol, codewords.map(_.toSeq), nSeg, segDim)
     array((0 until nSeg).map(s => element_at(best, s + 1).getField("j")): _*)
   }
+
+  /** Per-query ADC lookup tables (q_id, lut), shared by [[adcSearch]] and
+    * [[ivfPqSearch]]: lut(s)(j) is the squared L2 distance between the
+    * query's and codeword j's segment s, accumulated left-to-right in
+    * double. Driver-computed from the broadcast-small query set.
+    */
+  private def adcLuts(
+      queries: DataFrame, idCol: String, vecCol: String,
+      codewords: Array[Array[Float]], nSeg: Int, segDim: Int): DataFrame = {
+    val luts: Seq[(Long, Seq[Seq[Double]])] = queries
+      .select(col(idCol).cast("long"), col(vecCol)).collect().toSeq
+      .map { r =>
+        val qv = r.getSeq[Float](1)
+        r.getLong(0) -> (0 until nSeg).map { s =>
+          val qs = qv.slice(s * segDim, (s + 1) * segDim)
+          codewords.toSeq.map { cw =>
+            val cs = cw.slice(s * segDim, (s + 1) * segDim)
+            qs.zip(cs).foldLeft(0.0) { case (a, (qd, cd)) =>
+              val d = qd.toDouble - cd.toDouble; a + d * d
+            }
+          }
+        }
+      }
+    val session = queries.sparkSession
+    import session.implicits._
+    luts.toDF("q_id", "lut")
+  }
+
+  /** The ADC distance of a coded vector to a query: Σ_s lut(s)(codes(s)),
+    * summed s = 0..nSeg-1 left-to-right (the oracles pin the same order).
+    */
+  private def adcSum(nSeg: Int): Column =
+    (0 until nSeg).map { s =>
+      element_at(element_at(col("lut"), s + 1),
+        element_at(col("codes"), s + 1).cast("int") + 1)
+    }.reduceLeft(_ + _)
 
   /** Asymmetric-distance PQ search (the search half of [[pqEncode]]):
     * corpus vectors are reduced to their nibble codes, queries stay raw,
@@ -254,43 +352,18 @@ object Similarity {
       nCodes: Int = 16): DataFrame = {
     require(dim % nSeg == 0, s"dim $dim must split into $nSeg segments")
     val segDim = dim / nSeg
-    val codewords: Array[Seq[Float]] = corpus
-      .select(col(idCol).cast("long"), col(vecCol))
-      .orderBy(col(idCol).cast("long").asc)
-      .limit(nCodes)
-      .collect()
-      .map(_.getSeq[Float](1).toSeq)
+    val codewords = model(corpus, idCol, vecCol, nCodes)
     val codes = segCodes(col(vecCol), codewords, nSeg, segDim)
     // materialize the code assignment BEFORE the query fan-out: the
     // broadcast join would otherwise re-evaluate the 8×16-codeword argmin
     // scan once per query row it pairs with
     val coded = corpus.select(col(idCol).cast("long").as("cid"), codes.as("codes"))
       .localCheckpoint(true)
-    val luts: Seq[(Long, Seq[Seq[Double]])] = queries
-      .select(col(idCol).cast("long"), col(vecCol)).collect().toSeq
-      .map { r =>
-        val qv = r.getSeq[Float](1)
-        r.getLong(0) -> (0 until nSeg).map { s =>
-          val qs = qv.slice(s * segDim, (s + 1) * segDim)
-          (0 until nCodes).map { j =>
-            val cs = codewords(j).slice(s * segDim, (s + 1) * segDim)
-            qs.zip(cs).foldLeft(0.0) { case (a, (qd, cd)) =>
-              val d = qd.toDouble - cd.toDouble; a + d * d
-            }
-          }.toSeq
-        }.toSeq
-      }
-    val session = corpus.sparkSession
-    import session.implicits._
-    val qdf = broadcast(luts.toDF("q_id", "lut"))
-    val adc = (0 until nSeg).map { s =>
-      element_at(element_at(col("lut"), s + 1),
-        element_at(col("codes"), s + 1).cast("int") + 1)
-    }.reduceLeft(_ + _)
+    val qdf = broadcast(adcLuts(queries, idCol, vecCol, codewords, nSeg, segDim))
     val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("cid").asc)
     coded.crossJoin(qdf)
       .where(col("q_id") =!= col("cid"))
-      .select(col("q_id"), col("cid"), adc.as("adc"))
+      .select(col("q_id"), col("cid"), adcSum(nSeg).as("adc"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select(col("q_id"), col("cid").as("neighbor_id"),
@@ -329,63 +402,23 @@ object Similarity {
       nProbe: Int = 4): DataFrame = {
     require(dim % nSeg == 0, s"dim $dim must split into $nSeg segments")
     val segDim = dim / nSeg
-    val model: Array[Seq[Float]] = corpus
-      .select(col(idCol).cast("long"), col(vecCol))
-      .orderBy(col(idCol).cast("long").asc)
-      .limit(math.max(nCodes, nCells))
-      .collect()
-      .map(_.getSeq[Float](1).toSeq)
-    val codewords = model.take(nCodes)
-    val centroids = model.take(nCells)
-    // r19: literal centroid norms + one per-row norm (same accumulation
-    // as the fused kernel — bit-identical; see ivfTopK)
-    val cnorm: Array[Double] = centroids.map { cv =>
-      math.sqrt(cv.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-    }
-    def cellScores(v: Column, vn: Column): Column = array(centroids.zipWithIndex.map {
-      case (cv, ci) =>
-        struct(cosinePre(v, typedlit(cv), vn, lit(cnorm(ci))).as("cos"), lit(ci.toLong).as("cid"))
-    }: _*)
+    val standIn = model(corpus, idCol, vecCol, math.max(nCodes, nCells))
+    val codewords = standIn.take(nCodes)
+    val centroids = standIn.take(nCells)
     // ONE fused scan assigns cell + codes; materialize before the fan-out
     val coded = corpus.select(col(idCol).cast("long").as("cid"),
-        col(vecCol).as("_v"), norm(col(vecCol)).as("_vn"))
-      .select(col("cid"),
-        array_max(cellScores(col("_v"), col("_vn"))).getField("cid").as("cell"),
-        segCodes(col("_v"), codewords, nSeg, segDim).as("codes"))
+        assignCell(col(vecCol), centroids).as("cell"),
+        segCodes(col(vecCol), codewords, nSeg, segDim).as("codes"))
       .localCheckpoint(true)
-    val luts: Seq[(Long, Seq[Seq[Double]])] = queries
-      .select(col(idCol).cast("long"), col(vecCol)).collect().toSeq
-      .map { r =>
-        val qv = r.getSeq[Float](1)
-        r.getLong(0) -> (0 until nSeg).map { s =>
-          val qs = qv.slice(s * segDim, (s + 1) * segDim)
-          (0 until nCodes).map { j =>
-            val cs = codewords(j).slice(s * segDim, (s + 1) * segDim)
-            qs.zip(cs).foldLeft(0.0) { case (a, (qd, cd)) =>
-              val d = qd.toDouble - cd.toDouble; a + d * d
-            }
-          }.toSeq
-        }.toSeq
-      }
-    // probed cells come from the same cosine kernel as the corpus cells
-    // (descending (cos, cid) — ties resolve identically on both sides)
     val probes = queries
       .select(col(idCol).cast("long").as("q_id"),
-        col(vecCol).as("_qv"), norm(col(vecCol)).as("_qn"))
-      .select(col("q_id"),
-        slice(reverse(array_sort(cellScores(col("_qv"), col("_qn")))), 1, nProbe).as("_top"))
-      .select(col("q_id"), explode(col("_top").getField("cid")).as("cell"))
-    val session = corpus.sparkSession
-    import session.implicits._
-    val qdf = broadcast(luts.toDF("q_id", "lut").join(probes, Seq("q_id")))
-    val adc = (0 until nSeg).map { s =>
-      element_at(element_at(col("lut"), s + 1),
-        element_at(col("codes"), s + 1).cast("int") + 1)
-    }.reduceLeft(_ + _)
+        explode(probeCells(col(vecCol), centroids, nProbe)).as("cell"))
+    val qdf = broadcast(adcLuts(queries, idCol, vecCol, codewords, nSeg, segDim)
+      .join(probes, Seq("q_id")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("cid").asc)
     coded.join(qdf, Seq("cell"))
       .where(col("q_id") =!= col("cid"))
-      .select(col("q_id"), col("cid"), adc.as("adc"))
+      .select(col("q_id"), col("cid"), adcSum(nSeg).as("adc"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select(col("q_id"), col("cid").as("neighbor_id"),
@@ -489,9 +522,10 @@ object Similarity {
     * `nProbe` cells nearest to it. Centroids default to the deterministic
     * lowest-id stand-in (keeps the operator oracle-checkable); pass
     * `trained` (e.g. [[kmeansCentroidVectors]]) to use a real model.
-    * At scale: cell assignment is a pure scan (fused cosine kernels against
-    * broadcast centroid literals), and the candidate join shuffles only
-    * cell keys — the IVF index structure without a vector-DB dependency.
+    * At scale: cell assignment is a pure scan ([[assignCell]]: one fused
+    * argmax-cosine loop per row over the driver-side centroid matrix), and
+    * the candidate join shuffles only cell keys — the IVF index structure
+    * without a vector-DB dependency.
     */
   def ivfTopK(
       corpus: DataFrame,
@@ -502,37 +536,14 @@ object Similarity {
       nCentroids: Int = 16,
       nProbe: Int = 4,
       trained: Option[Seq[Seq[Float]]] = None): DataFrame = {
-    val centroids: Array[(Long, Seq[Float])] = trained match {
-      case Some(cs) => cs.zipWithIndex.map { case (v, i) => i.toLong -> v }.toArray
-      case None => corpus
-        .select(col(idCol).cast("long"), col(vecCol))
-        .orderBy(col(idCol).cast("long").asc)
-        .limit(nCentroids)
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq)
-    }
-    // per-centroid scores as an array<struct<cos,cid>>; struct ordering
-    // (cos first) makes array_max the argmax — no window, no shuffle.
-    // r19: the row norm is computed once per row and the centroid norms
-    // are driver-side literals (same left-to-right double accumulation +
-    // Math.sqrt as the fused kernel — bit-identical), so the k-way score
-    // array and the exact re-rank pay one dot loop per comparison
-    val cnorm: Array[Double] = centroids.map { case (_, cv) =>
-      math.sqrt(cv.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-    }
-    def cellScores(v: Column, vn: Column): Column = array(centroids.zipWithIndex.map {
-      case ((_, cv), ci) =>
-        struct(cosinePre(v, typedlit(cv), vn, lit(cnorm(ci))).as("cos"), lit(ci.toLong).as("cid"))
-    }: _*)
-    val cells = corpus.select(
-      col(idCol).as("neighbor_id"), col(vecCol).as("cv"), norm(col(vecCol)).as("_cn"))
-      .select(col("neighbor_id"), col("cv"), col("_cn"),
-        array_max(cellScores(col("cv"), col("_cn"))).getField("cid").as("cell"))
+    val centroids = model(corpus, idCol, vecCol, nCentroids, trained)
+    // the row norms are computed once per row, so the exact re-rank pays
+    // one dot loop per (query, candidate) pair
+    val cells = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      norm(col(vecCol)).as("_cn"), assignCell(col(vecCol), centroids).as("cell"))
     val probes = queries
-      .select(col(idCol).as("q_id"), col(vecCol).as("qv"), norm(col(vecCol)).as("_qn"))
-      .select(col("q_id"), col("qv"), col("_qn"),
-        slice(reverse(array_sort(cellScores(col("qv"), col("_qn")))), 1, nProbe).as("_top"))
-      .select(col("q_id"), col("qv"), col("_qn"), explode(col("_top").getField("cid")).as("cell"))
+      .select(col(idCol).as("q_id"), col(vecCol).as("qv"), norm(col(vecCol)).as("_qn"),
+        explode(probeCells(col(vecCol), centroids, nProbe)).as("cell"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     cells
       .join(broadcast(probes), Seq("cell"))

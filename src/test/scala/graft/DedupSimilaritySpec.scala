@@ -308,18 +308,31 @@ class DedupSimilaritySpec extends SparkSpec {
       (40L, matrix(2).map(_ * 2f)) :+            // cos 1.0 with BOTH 2 and 5
       (41L, Array.fill(dim)(0f))                 // zero norm: cos 0.0 everywhere
     val df = rows.toDF("id", "v")
+    // a null vector: every struct-max cosine is null, so the tie on j
+    // breaks high (the oracles' ORDER BY cos DESC, ci DESC)
+    val withNull = df.union(Seq((42L, null.asInstanceOf[Array[Float]])).toDF("id", "v"))
+    def picks(in: org.apache.spark.sql.DataFrame, pick: org.apache.spark.sql.Column) =
+      in.select(col("id"), pick.as("pick"))
+        .collect().map(r => r.getLong(0) -> r.getAs[java.lang.Long](1)).toMap
     // the replaced form: cosineFF against each centroid + max(struct(cos, j))
-    val structMax = df.select(col("id"), array_max(array(matrix.zipWithIndex.map {
+    val structMax = picks(withNull, array_max(array(matrix.zipWithIndex.map {
         case (c, j) => struct(VectorExprs.cosineFF(col("v"), typedlit(c.toSeq)).as("cos"),
           lit(j.toLong).as("j"))
-      }: _*)).getField("j").as("pick"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val kernel = df.select(col("id"), VectorExprs.argmaxCosStride(
-        col("v"), lit(0L), lit(matrix.length.toLong), 1, matrix).as("pick"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(kernel == structMax)
+      }: _*)).getField("j"))
+    val kernel = picks(df, VectorExprs.argmaxCosStride(
+        col("v"), lit(0L), lit(matrix.length.toLong), 1, matrix))
+    assert(kernel == structMax - 42L)
     assert(kernel(40L) == 5L, "cosine tie must break to the HIGHEST index (struct-max order)")
     assert(kernel(41L) == matrix.length - 1L, "all-zero vector cosines are 0.0 everywhere; highest index wins")
+    // the corpus-side helper: the same kernel, plus the null-vector row
+    // coalesced to cell k-1 exactly where the struct-max form puts it
+    val cells = withNull.select(col("id"), Similarity.assignCell(col("v"), matrix).as("cell"))
+    assert(!cells.schema("cell").nullable,
+      "a nullable cell lets an inferred isnotnull(cell) pull the kernel under a Filter")
+    val helper = picks(cells, col("cell"))
+    assert(helper == structMax)
+    assert(helper(42L) == matrix.length - 1L, "null vector lands in cell k-1")
+    assert(helper(40L) == 5L && helper(41L) == matrix.length - 1L)
     // strided scan visits only lo, lo+stride, …: stride 3 from 0 over 7 rows = {0, 3, 6}
     val strided = df.select(col("id"), VectorExprs.argmaxCosStride(
         col("v"), lit(0L), lit(matrix.length.toLong), 3, matrix).as("pick"))

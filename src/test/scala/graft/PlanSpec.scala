@@ -300,10 +300,48 @@ class PlanSpec extends SparkSpec {
     // (Before the fix, PushDownLeftSemiAntiJoin hoisted the probe-side
     // repartition above the semi join and the quantizer re-evaluated 3–5×
     // across scans/filters — the r9 d11 regression.)
-    assert(!p.contains("array_max"),
-      "quantizer argmax re-evaluated in the query plan — the checkpoint isn't feeding all consumers:\n" + p)
+    for (assign <- Seq("array_max", "argmax_cos_stride"))
+      assert(!p.contains(assign),
+        s"quantizer $assign re-evaluated in the query plan — the checkpoint isn't feeding all consumers:\n" + p)
     assert(p.contains("ExistingRDD") || p.contains("LocalTableScan"),
       "expected the checkpointed assignment scan:\n" + p)
+  }
+
+  test("s03/s10/s12/d11/d13: cell assignment never runs under a Filter") {
+    // the round-19 s03 3x regression: Spark pushed the join's inferred
+    // isnotnull(cell) below the projection, so a Filter evaluated the
+    // whole k-way argmax a second time per row. Similarity.assignCell's
+    // non-nullable cell lets that filter fold away; pin it on every
+    // flat-assignment consumer.
+    import org.apache.spark.sql.catalyst.expressions.{ArrayMax, Expression}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import graft.expressions.ArgmaxCosStride
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    def assigns(e: Expression): Boolean = e.find {
+      case _: ArgmaxCosStride | _: ArrayMax => true
+      case _ => false
+    }.isDefined
+    for (name <- Seq("s03_ann_ivf", "s10_ivfpq", "s12_ann_ivf_trained",
+        "d11_semantic_dedup", "d13_semantic_dedup_trained")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      val plan = nodes(df.queryExecution.executedPlan)
+      plan.foreach {
+        case f: FilterExec =>
+          assert(!assigns(f.condition), s"$name: cell assignment under a Filter: ${f.condition}")
+        case _ =>
+      }
+      // d11's absence is pinned by its own test above; d13 shares the
+      // checkpointed prune, so the assignment must not appear at all
+      if (name == "d13_semantic_dedup_trained")
+        assert(!plan.exists(_.expressions.exists(assigns)),
+          s"$name: quantizer re-evaluated in the query plan:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("q54: order totals aggregate below the joins, top-20 is TakeOrdered") {
