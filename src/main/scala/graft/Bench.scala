@@ -31,8 +31,8 @@ object Bench {
     "q64_kmv_mergeable", "q65_sketch_quantiles", "q66_bfs_depths", "q67_excess_shippers",
     "q68_nation_value", "q69_kmv_intersection", "q70_decile_bins", "q71_sketch_bins",
     "q72_nation_value_wide",
-    // the widened revenue_sum family: benched so "within noise of the
-    // 64-bit form" stays a measured round-over-round claim, not a one-off
+    // aliases of q12/q16/q48/q49 since exact sums became the only path;
+    // still benched so the total stays comparable round over round
     "q73_pricing_summary_wide", "q74_brand_volume_wide",
     "q75_revenue_forecast_wide", "q76_promo_share_wide",
     // the integer-cents cast-fidelity escapes (r16/r17): same scan classes

@@ -66,23 +66,13 @@ final case class GraftSettings(env: Map[String, String]) {
     */
   val inputDir: String = get("LOCAL_INPUT_DIR").getOrElse("./data/parquet")
 
-  /** Skip the initial full import and ride incrementals only. */
-  val skipFullImport: Boolean = get("SKIP_FULL_IMPORT").exists(_.toBoolean)
-
-  /** GRAFT_WIDE_SUMS=1 — the engine-level widening switch: every registered
-    * grouped revenue/value-sum family member aggregates in decimal(38,0)
-    * (SparkEntry.xsum) instead of 64-bit. Flip when OverflowAudit's
-    * per-group bounds cross the alarm line at the deployment's data volume
-    * (~sf1000 for the largest members); below the ceiling the flip is a
-    * spec-pinned pure representation change. The runtime conf
-    * `spark.graft.wideSums` overrides this env default in-process.
-    */
-  val wideSums: Boolean =
-    get("GRAFT_WIDE_SUMS").exists(v => v == "1" || v.equalsIgnoreCase("true"))
+  /** SKIP_FULL_IMPORT=1 — skip the initial full import and ride
+    * incrementals only. */
+  val skipFullImport: Boolean = GraftSettings.flag(env, "SKIP_FULL_IMPORT")
 
   /** GRAFT_CENTS_OUT=1 — the engine-level integer-cents OUTPUT switch:
     * every member of OverflowAudit's `cast_double:cents2` row (q12, q13,
-    * q16, q73, q74) emits HALF_UP cents as BIGINT with always-wide sums
+    * q16, q73, q74) emits HALF_UP cents as BIGINT with exact sums
     * instead of the `.cast(double)/10^s` dollar form. Flip when the
     * cast-fidelity audit row crosses its TRUE 100%-of-2^53 line (~sf285
     * for the charge-cents family; fired in anger on the sf300 probe) —
@@ -92,8 +82,7 @@ final case class GraftSettings(env: Map[String, String]) {
     * always-on registered forms are q77/q78/q79. The runtime conf
     * `spark.graft.centsOut` overrides this env default in-process.
     */
-  val centsOut: Boolean =
-    get("GRAFT_CENTS_OUT").exists(v => v == "1" || v.equalsIgnoreCase("true"))
+  val centsOut: Boolean = GraftSettings.flag(env, "GRAFT_CENTS_OUT")
 
   val targetName: String = get("TARGET_NAME").getOrElse("unknown")
 
@@ -141,6 +130,15 @@ final case class GraftSettings(env: Map[String, String]) {
 }
 
 object GraftSettings {
+
+  /** The one boolean env-flag parse: "1" or "true" (any case, trimmed)
+    * is on; anything else, or no key, is off. */
+  def flag(env: Map[String, String], key: String): Boolean = env.get(key).exists(isOn)
+
+  def isOn(v: String): Boolean = {
+    val t = v.trim
+    t == "1" || t.equalsIgnoreCase("true")
+  }
 
   /** Read from the process environment. */
   def fromEnv(): GraftSettings = GraftSettings(sys.env)

@@ -99,14 +99,12 @@ object SparkEntry {
     * the ≤4 fractional digits exactly. The final `.cast("double")` is the
     * LAST exactness boundary and its headroom is REAL, not comfortable:
     * the measured family-ceiling cents at sf200 are 6.28e15 — already 70%
-    * of double's 2^53 = 9.007e15 exact-integer range — so a wide sum
-    * growing linearly wraps the cast near sf~285. OverflowAudit carries a
+    * of double's 2^53 = 9.007e15 exact-integer range — so an exact sum
+    * growing linearly outruns the cast near sf~285. OverflowAudit carries a
     * `cents_double` row against the 2^53 ceiling for exactly this cast
     * (escape: emit integer cents — the q77 registered form). Oracle
     * mirror: `CAST((sum + k/2) // k AS DOUBLE) / 100.0` (positive sums, so
-    * DuckDB's truncating `//` is floor). A wrapped NARROW sum (negative)
-    * floors differently than it truncates — irrelevant: past the ceiling
-    * the value is garbage by definition and the overflow gate names it.
+    * DuckDB's truncating `//` is floor).
     */
   private def cents2(sumI: Column, scale: Int): Column = {
     val k = math.pow(10, scale - 2).toLong
@@ -153,57 +151,28 @@ object SparkEntry {
       .cast("double") / lit(p.toDouble)
   }
 
-  /** Σ over an exact scaled-integer term with a selectable buffer width —
-    * the width parameter VERDICT r11 asked for on the shared aggregation
-    * path. `wide = false` is the 64-bit fast path (8-byte agg buffer,
-    * whole-stage codegen's primitive sum): the default regime wherever
-    * OverflowAudit's families sit below 10% of 2⁶³. `wide = true` is the
-    * documented widening switch (SURVEY §4, the q72 pattern) applied to
-    * the `revenue_sum` family the sf100 gate firing actually named: the
-    * same sum in decimal(38,0) — still exact, hence order-independent and
-    * hash-stable; the plan shape (partial/final agg split, broadcast
-    * joins, pushed filters) is unchanged and only the buffer widens 8→16
-    * bytes, moving the family ceiling to ~10²¹× any physical deployment.
-    * Measured precedent (q72 at 600M rows): within ~12% of the narrow
-    * form. The q73–q76 `_wide` variants instantiate it; QueriesSpec pins
-    * each ≡ its 64-bit form below the ceiling.
+  /** Σ over an exact scaled-integer term: the engine's one money-sum path.
+    * [[graft.expressions.Sum128]] accumulates the long term in a two-long
+    * (128-bit) codegen buffer and yields decimal(38,0) — exact, hence
+    * order-independent and hash-stable, with no 64-bit ceiling on the SUM
+    * (the per-row term itself is still a long). It is the only sum here
+    * because it measured within run-to-run noise of the 64-bit sum on
+    * every member (BENCH_AB_WIDESUMS.json; q12, with seven sums per row,
+    * is the most consistent cost at ~1.14×), with the 64-bit form's plan
+    * shape. Every consumer reads the result through a double cast, a
+    * decimal(38,0) integer chain (cents2/centsI/rdiv/idiv) or a
+    * decimal-safe comparison, and the DuckDB oracles sum in HUGEINT, so
+    * the output matches them past 2⁶³.
     */
-  private[graft] def xsum(term: Column, wide: Boolean): Column =
-    if (wide)
-      // r18: Sum128 — the same exact decimal(38,0)-valued sum over a
-      // two-long codegen buffer instead of per-row Decimal/BigDecimal
-      // arithmetic (uniform +0.2–0.35 s per wide query at sf0.1 before;
-      // see graft.expressions.Sum128)
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.expressions.Sum128(
-          org.apache.spark.sql.graft.ColumnBridge.expression(term.cast("long")))
-          .toAggregateExpression())
-    else sum(term)
-
-  /** The ENGINE-LEVEL wide-sums switch (VERDICT r12/r13 task 1): one config
-    * flag flips every registered member of the grouped revenue/value-sum
-    * family through [[xsum]]'s decimal(38,0) buffer instead of adding more
-    * `_wide` query variants. Deployment flips `GRAFT_WIDE_SUMS=1` in the
-    * environment (GraftSettings is the documented home); in-process callers
-    * and specs flip the `spark.graft.wideSums` runtime conf, which takes
-    * precedence. Default (unset) is the narrow 64-bit fast path — correct
-    * through the measured sf100 decade for every grouped member; at ~sf1000
-    * (the 100 TB design point) the larger per-group sums cross 2⁶³ and this
-    * is the switch OverflowAudit's "flip the widening switch" alarm refers
-    * to. The flip is a pure representation change below the ceiling (the
-    * q73≡q12 theorem, spec-pinned per swept member in QueriesSpec): every
-    * swept sum is exposed only through a double cast or an exact
-    * decimal-safe comparison, so output schema and values are identical and
-    * the existing DuckDB oracles (natively HUGEINT) grade both modes.
-    */
-  private[graft] def wideSums(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.wideSums")
-      .map(v => v == "1" || v.equalsIgnoreCase("true"))
-      .getOrElse(GraftSettings.fromEnv().wideSums)
+  private[graft] def xsum(term: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.expressions.Sum128(
+        org.apache.spark.sql.graft.ColumnBridge.expression(term.cast("long")))
+        .toAggregateExpression())
 
   /** The ENGINE-LEVEL integer-cents OUTPUT switch (VERDICT r16 task 1,
-    * generalizing q77 beyond the pricing-summary family). The wide-sums
-    * switch moves where the SUM lives; the final `.cast("double")/10^s`
+    * generalizing q77 beyond the pricing-summary family). [[xsum]]'s
+    * exact sum has no 64-bit ceiling, but the final `.cast("double")/10^s`
     * still rounds once the integer passes 2^53 (~sf285 for q12's charge
     * cents, measured 70% at sf200, fired in anger at sf300) — drift, not
     * garbage, and still hash-identical cross-engine, but no longer the
@@ -211,18 +180,17 @@ object SparkEntry {
     * or `spark.graft.centsOut` (runtime conf, takes precedence) routes
     * EVERY member of OverflowAudit's `cast_double` rows to its
     * integer-cents output form: the `cents2` row (q12, q13, q16 and their
-    * forced-wide forms q73, q74); — r18, VERDICT r17 item 3 — the
+    * aliases q73, q74); — r18, VERDICT r17 item 3 — the
     * `value_sums` row (q48/q75, q53, q55) and the `event_value` row (q11,
     * q22, q23, q30, q44, q47); and — r18 wave 2 — the `grouped_revenue`
     * row (q34, q40, q41, q49/q76 — these cross 2^53 FIRST, ~sf19-60), the
     * `entity_revenue` row (q08, q29, q32, q35, q56 — constant per entity,
     * alarm = key skew), the `acctbal` row (q18, q43) and the `qty` row
     * (q54, q59). The form is HALF_UP cents as BIGINT (exact to
-    * 2^63 cents ≈ $9.2e16, ~10^3× the 2^53 line), sums always wide where
-    * the internal scale exceeds 2 (the escape exists precisely for
-    * deployments past the narrow regime; q30's fold state is already the
-    * 64-bit cents ledger, so its escape only drops the cast). Unlike the
-    * wide switch this is an OUTPUT-FORM change (schema differs: `_c2`
+    * 2^63 cents ≈ $9.2e16, ~10^3× the 2^53 line), sums exact ([[xsum]])
+    * where the internal scale exceeds 2 (q30's fold state is already the
+    * 64-bit cents ledger, so its escape only drops the cast). This is an
+    * OUTPUT-FORM change (schema differs: `_c2`
     * BIGINT columns, avg columns omitted — per-row means never approach
     * 2^53), so each FAMILY has a registered always-on escape query with
     * its own HUGEINT oracle: q77 (pricing summary), q78 (region revenue),
@@ -234,8 +202,7 @@ object SparkEntry {
     */
   private[graft] def centsOut(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.centsOut")
-      .map(v => v == "1" || v.equalsIgnoreCase("true"))
-      .getOrElse(GraftSettings.fromEnv().centsOut)
+      .fold(GraftSettings.flag(sys.env, "GRAFT_CENTS_OUT"))(GraftSettings.isOn)
 
   /** HALF_UP integer cents of a nonnegative 10^scale-scaled integer sum —
     * the BIGINT output column of the cents escape forms ([[centsOut]]):
@@ -254,17 +221,11 @@ object SparkEntry {
   private def centsIS(sumI: Column, scale: Int): Column =
     when(sumI < 0, -centsI(-sumI, scale)).otherwise(centsI(sumI, scale))
 
-  // The revenue_sum family (q12/q16/q48/q49-class global scaled-integer
-  // sums), width-parameterized: registered narrow under the original names
-  // and wide as q73–q76 — the production switch for data past the
-  // OverflowAudit alarm (revenue_sum crossed 10% of 2⁶³ between sf1 and
-  // sf10 on the replication sets, and WRAPPED at sf100). The cents2
-  // members (q12/q13/q16 — OverflowAudit's `cast_double:cents2` row)
-  // additionally carry the `cents` output-form parameter ([[centsOut]]):
-  // cents=true emits HALF_UP cents as BIGINT (always-wide sums) — the
-  // 2^53 cast-fidelity escape, registered always-on as q77/q78/q79.
-  private def pricingSummary(s: SparkSession, dir: String, wide: Boolean,
-      cents: Boolean = false): DataFrame = {
+  // The revenue_sum family (q12/q13/q16/q48/q49, summed through [[xsum]];
+  // q73–q76 are aliases of q12/q16/q48/q49). The `cents` output-form
+  // parameter ([[centsOut]]) emits HALF_UP cents as BIGINT — the 2^53
+  // cast-fidelity escape, registered always-on as q77–q80.
+  private def pricingSummary(s: SparkSession, dir: String, cents: Boolean): DataFrame = {
     val base = Tables.lineitem(s, dir)
       .where(to_date(col("l_shipdate")) <= lit("1998-09-02"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -272,25 +233,24 @@ object SparkEntry {
     if (cents)
       // avg columns omitted: per-row means never approach 2^53
       base.agg(
-        xsum(c2(col("l_quantity")), wide = true).cast("long").as("sum_qty_c2"),
-        xsum(c2(col("l_extendedprice")), wide = true).cast("long").as("sum_base_price_c2"),
-        centsI(xsum(disc, wide = true), 4).as("sum_disc_price_c2"),
-        centsI(xsum(disc * (lit(100L) + c2(col("l_tax"))), wide = true), 6).as("sum_charge_c2"),
+        xsum(c2(col("l_quantity"))).cast("long").as("sum_qty_c2"),
+        xsum(c2(col("l_extendedprice"))).cast("long").as("sum_base_price_c2"),
+        centsI(xsum(disc), 4).as("sum_disc_price_c2"),
+        centsI(xsum(disc * (lit(100L) + c2(col("l_tax")))), 6).as("sum_charge_c2"),
         count(lit(1)).as("count_order"))
     else
       base.agg(
-        round(xsum(c2(col("l_quantity")), wide).cast("double") / lit(100.0), 2).as("sum_qty"),
-        round(xsum(c2(col("l_extendedprice")), wide).cast("double") / lit(100.0), 2).as("sum_base_price"),
-        cents2(xsum(disc, wide), 4).as("sum_disc_price"),
-        cents2(xsum(disc * (lit(100L) + c2(col("l_tax"))), wide), 6).as("sum_charge"),
-        rdiv(xsum(c2(col("l_quantity")), wide), count(lit(1)) * lit(100L), 4).as("avg_qty"),
-        rdiv(xsum(c2(col("l_extendedprice")), wide), count(lit(1)) * lit(100L), 4).as("avg_price"),
-        rdiv(xsum(c2(col("l_discount")), wide), count(lit(1)) * lit(100L), 4).as("avg_disc"),
+        round(xsum(c2(col("l_quantity"))).cast("double") / lit(100.0), 2).as("sum_qty"),
+        round(xsum(c2(col("l_extendedprice"))).cast("double") / lit(100.0), 2).as("sum_base_price"),
+        cents2(xsum(disc), 4).as("sum_disc_price"),
+        cents2(xsum(disc * (lit(100L) + c2(col("l_tax")))), 6).as("sum_charge"),
+        rdiv(xsum(c2(col("l_quantity"))), count(lit(1)) * lit(100L), 4).as("avg_qty"),
+        rdiv(xsum(c2(col("l_extendedprice"))), count(lit(1)) * lit(100L), 4).as("avg_price"),
+        rdiv(xsum(c2(col("l_discount"))), count(lit(1)) * lit(100L), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
   }
 
-  private def brandVolume(s: SparkSession, dir: String, wide: Boolean,
-      cents: Boolean = false): DataFrame = {
+  private def brandVolume(s: SparkSession, dir: String, cents: Boolean): DataFrame = {
     val li = Tables.lineitem(s, dir)
     val p = Tables.part(s, dir)
     val base = li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
@@ -298,18 +258,17 @@ object SparkEntry {
     val disc = c2(col("l_extendedprice")) * (lit(100L) - c2(col("l_discount")))
     if (cents)
       base.agg(
-        xsum(c2(col("l_quantity")), wide = true).cast("long").as("sum_qty_c2"),
-        centsI(xsum(disc, wide = true), 4).as("revenue_c2"),
+        xsum(c2(col("l_quantity"))).cast("long").as("sum_qty_c2"),
+        centsI(xsum(disc), 4).as("revenue_c2"),
         count(lit(1)).as("n_items"))
     else
       base.agg(
-        round(xsum(c2(col("l_quantity")), wide).cast("double") / lit(100.0), 2).as("sum_qty"),
-        cents2(xsum(disc, wide), 4).as("revenue"),
+        round(xsum(c2(col("l_quantity"))).cast("double") / lit(100.0), 2).as("sum_qty"),
+        cents2(xsum(disc), 4).as("revenue"),
         count(lit(1)).as("n_items"))
   }
 
-  private def regionRevenue(s: SparkSession, dir: String, wide: Boolean,
-      cents: Boolean = false): DataFrame = {
+  private def regionRevenue(s: SparkSession, dir: String, cents: Boolean): DataFrame = {
     val li = Tables.lineitem(s, dir)
     val o = Tables.orders(s, dir)
     val c = Tables.customer(s, dir)
@@ -320,26 +279,22 @@ object SparkEntry {
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
-    // grouped revenue sum on the engine-level width switch: 25-nation
-    // groups of the global sum cross 2⁶³ near sf1000 — the q13-class
-    // bound OverflowAudit's grouped audit measures
     val disc = c2(col("l_extendedprice")) * (lit(100L) - c2(col("l_discount")))
     if (cents)
-      base.agg(centsI(xsum(disc, wide = true), 4).as("revenue_c2"),
+      base.agg(centsI(xsum(disc), 4).as("revenue_c2"),
         count(lit(1)).as("n_items"))
     else
-      base.agg(cents2(xsum(disc, wide), 4).as("revenue"),
+      base.agg(cents2(xsum(disc), 4).as("revenue"),
         count(lit(1)).as("n_items"))
   }
 
-  private def revenueForecast(s: SparkSession, dir: String, wide: Boolean,
-      cents: Boolean = false): DataFrame = {
+  private def revenueForecast(s: SparkSession, dir: String, cents: Boolean): DataFrame = {
     // TPC-H Q6 shape: the what-if revenue scan — every predicate
     // (shipdate range, discount band, quantity cap) pushes to the
     // parquet scan, the aggregate is a single exact scaled-integer sum;
     // zero shuffles beyond the final scalar reduce. cents=true is the
-    // 2^53 output-cast escape (the q77 pattern): HALF_UP cents as BIGINT,
-    // sum always wide — registered always-on as q80, routed in place for
+    // 2^53 output-cast escape (the q77 pattern): HALF_UP cents as BIGINT
+    // — registered always-on as q80, routed in place for
     // q48/q75 by [[centsOut]].
     val base = Tables.lineitem(s, dir)
       .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -347,31 +302,31 @@ object SparkEntry {
         col("l_discount").between(0.02, 0.04) && col("l_quantity") < 24)
     val disc4 = graft.expressions.MoneyRound.scaledLong(col("l_extendedprice") * col("l_discount"), 10000)
     if (cents)
-      base.agg(centsI(xsum(disc4, wide = true), 4).as("revenue_c2"),
+      base.agg(centsI(xsum(disc4), 4).as("revenue_c2"),
         count(lit(1)).as("n_items"))
     else
       base.agg(
-        (xsum(disc4, wide).cast("double") / 10000.0).as("revenue"),
+        (xsum(disc4).cast("double") / 10000.0).as("revenue"),
         count(lit(1)).as("n_items"))
   }
 
   /** q23's tumbling-daily rollup, output-form parameterized ([[centsOut]]):
-    * cents=true emits the value sum as BIGINT cents (wide accumulate, the
-    * q77 rule) — registered always-on as q81, routed in place for q23. */
+    * cents=true emits the value sum as BIGINT cents (exact [[xsum]]
+    * accumulate, the q77 rule) — registered always-on as q81, routed in
+    * place for q23. */
   private def tumblingDaily(s: SparkSession, dir: String,
       cents: Boolean = false): DataFrame = {
     val base = Tables.events(s, dir)
       .groupBy(expr("ts_us div 86400000000").as("day_idx"))
     if (cents)
       base.agg(count(lit(1)).as("n"),
-        xsum(c2(col("value")), wide = true).cast("long").as("sum_value_c2"))
+        xsum(c2(col("value"))).cast("long").as("sum_value_c2"))
     else
       base.agg(count(lit(1)).as("n"),
         round(sum(c2(col("value"))).cast("double") / lit(100.0), 2).as("sum_value"))
   }
 
-  private def promoShare(s: SparkSession, dir: String, wide: Boolean,
-      cents: Boolean = false): DataFrame = {
+  private def promoShare(s: SparkSession, dir: String, cents: Boolean): DataFrame = {
     // TPC-H Q14 shape: promo revenue share by ship year — the part dim
     // broadcasts into the fact scan and the share is a ratio of two
     // exact scaled-integer conditional sums (the q40 rule), so the one
@@ -386,8 +341,8 @@ object SparkEntry {
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_year"))
       .agg(
-        xsum(when(col("p_type") === "PROMO", col("vol4")).otherwise(0L), wide || cents).as("p4"),
-        xsum(col("vol4"), wide || cents).as("a4"))
+        xsum(when(col("p_type") === "PROMO", col("vol4")).otherwise(0L)).as("p4"),
+        xsum(col("vol4")).as("a4"))
       .select(col("l_year"),
         rdiv(col("p4"), col("a4"), 6).as("promo_share"),
         (if (cents) centsI(col("p4"), 4).as("promo_revenue_c2")
@@ -461,7 +416,7 @@ object SparkEntry {
           // centsOut (r18): spend as BIGINT cents — the 2^53 cast escape,
           // in place (cast_double:entity_revenue row)
           (if (centsOut(s))
-             coalesce(xsum(c2(col("o_totalprice")), wide = true).cast("long"), lit(0L))
+             coalesce(xsum(c2(col("o_totalprice"))).cast("long"), lit(0L))
                .as("total_spend_c2")
            else
              round(coalesce(sum(c2(col("o_totalprice"))), lit(0L)).cast("double") / lit(100.0), 2)
@@ -482,13 +437,10 @@ object SparkEntry {
     },
 
     // --- analytics engine core (bench headliners) ---------------------------
-    // the narrow family registrations follow the engine-level switch: wide
-    // only when GRAFT_WIDE_SUMS / spark.graft.wideSums flips them (q73–q76
-    // below stay FORCED wide — the always-on form the switch promotes to)
     "q12_pricing_summary" -> q((s, dir) =>
-      pricingSummary(s, dir, wide = wideSums(s), cents = centsOut(s))),
+      pricingSummary(s, dir, centsOut(s))),
     "q13_region_revenue" -> q((s, dir) =>
-      regionRevenue(s, dir, wide = wideSums(s), cents = centsOut(s))),
+      regionRevenue(s, dir, centsOut(s))),
     "q14_top_customers" -> q { (s, dir) =>
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       Tables.orders(s, dir)
@@ -537,19 +489,19 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_items"),
           // centsOut (r18): per-supplier price cents as BIGINT, in place
           (if (centsOut(s))
-             xsum(c2(col("l_extendedprice")), wide = true).cast("long").as("sum_price_c2")
+             xsum(c2(col("l_extendedprice"))).cast("long").as("sum_price_c2")
            else
-             round(xsum(c2(col("l_extendedprice")), wideSums(s)).cast("double") / lit(100.0), 2)
+             round(xsum(c2(col("l_extendedprice"))).cast("double") / lit(100.0), 2)
                .as("sum_price")))
     },
     "q16_brand_volume" -> q((s, dir) =>
-      brandVolume(s, dir, wide = wideSums(s), cents = centsOut(s))),
+      brandVolume(s, dir, centsOut(s))),
     "q17_priority_counts" -> q { (s, dir) =>
       Tables.orders(s, dir)
         .where(unix_millis(col("o_orderdate").cast("timestamp")).between(788918400000L, 796694399999L))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
-          rdiv(xsum(c2(col("o_totalprice")), wideSums(s)), count(lit(1)) * lit(100L), 2).as("avg_price"))
+          rdiv(xsum(c2(col("o_totalprice"))), count(lit(1)) * lit(100L), 2).as("avg_price"))
     },
     "q18_nation_rollup" -> q { (s, dir) =>
       val c = Tables.customer(s, dir)
@@ -562,9 +514,9 @@ object SparkEntry {
           // centsOut (r18): acctbal is already cents — BIGINT direct, no
           // division (negative balances stay exact; cast_double:acctbal)
           (if (centsOut(s))
-             xsum(c2(col("c_acctbal")), wide = true).cast("long").as("sum_acctbal_c2")
+             xsum(c2(col("c_acctbal"))).cast("long").as("sum_acctbal_c2")
            else
-             round(xsum(c2(col("c_acctbal")), wideSums(s)).cast("double") / lit(100.0), 2)
+             round(xsum(c2(col("c_acctbal"))).cast("double") / lit(100.0), 2)
                .as("sum_acctbal")))
         .select(
           coalesce(col("r_name"), lit("(all)")).as("r_name"),
@@ -658,7 +610,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           // centsOut (r18): band sums join the event_value cents family
           (if (centsOut(s))
-             xsum(c2(col("value")), wide = true).cast("long").as("sum_value_c2")
+             xsum(c2(col("value"))).cast("long").as("sum_value_c2")
            else
              round(sum(c2(col("value"))).cast("double") / lit(100.0), 2).as("sum_value")))
     },
@@ -756,21 +708,20 @@ object SparkEntry {
       // The age sum is an INTERVAL family, not a monetary one, and it is
       // the engine's earliest 64-bit crossing: worst per-type Σ(mx−ts_us)
       // measured 0.29% of 2⁶³ at sf0.1 — linear in rows AND in span, so it
-      // passes 100% near sf35 and reads 573% at sf200 (where the narrow
-      // sum is garbage while DuckDB's HUGEINT is not — caught r15 by the
-      // sf200 probe). Hence xsum under the same engine switch as the
-      // monetary families, and OverflowAudit carries an age_sum row naming
-      // this query. Rounding is exact-integer HALF_UP both columns: the
+      // passes 100% near sf35 and reads 573% at sf200 (where a 64-bit sum
+      // was garbage while DuckDB's HUGEINT was not — caught r15 by the
+      // sf200 probe). Hence the exact [[xsum]], like the monetary
+      // families. Rounding is exact-integer HALF_UP both columns: the
       // avg via [[idiv]] on (S + n·5000) / (n·10⁴) — n·5000 is integral
-      // for every n, so no ×2 widening of the narrow term — and the max
-      // via [[cents2]].
+      // for every n, so no ×2 widening of the term — and the max via
+      // [[cents2]].
       val ev = Tables.events(s, dir)
       val mx = ev.agg(max(col("ts_us")).as("mx"))
       ev.crossJoin(broadcast(mx))
         .groupBy(col("event_type"))
         .agg(
           count(lit(1)).as("n"),
-          (idiv(xsum(col("mx") - col("ts_us"), wideSums(s)) + count(lit(1)) * lit(5000L),
+          (idiv(xsum(col("mx") - col("ts_us")) + count(lit(1)) * lit(5000L),
             count(lit(1)) * lit(10000L)).cast("double") / lit(100.0)).as("avg_age_s"),
           cents2(max(col("mx") - col("ts_us")), 6).as("max_age_s"))
     },
@@ -1001,7 +952,7 @@ object SparkEntry {
       li.join(ord.join(broadcast(cust), col("o_custkey") === col("c_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(xsum(col("rev4"), wideSums(s)).as("rev4i"))
+        .agg(xsum(col("rev4")).as("rev4i"))
         // rank on the exact integer so the top-10 cutoff can't be decided
         // by double rounding
         .orderBy(col("rev4i").desc, col("o_orderkey").asc)
@@ -1046,9 +997,9 @@ object SparkEntry {
           // centsOut (r18): grouped_revenue cents escape — this class
           // crosses 2^53 near sf60 (nation-group worst at sf0.01 → ×6e3)
           (if (centsOut(s))
-             centsI(xsum(col("vol4"), wide = true), 4).as("revenue_c2")
+             centsI(xsum(col("vol4")), 4).as("revenue_c2")
            else
-             (xsum(col("vol4"), wideSums(s)).cast("double") / 10000.0).as("revenue")),
+             (xsum(col("vol4")).cast("double") / 10000.0).as("revenue")),
           count(lit(1)).as("n_items"))
     },
     "q35_returned_items" -> q { (s, dir) =>
@@ -1071,7 +1022,7 @@ object SparkEntry {
       // AND the top-20 ordering are engine-exact
       val byCust = li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey"))
-        .agg(xsum(graft.expressions.MoneyRound.scaledLong(col("rev"), 10000), wideSums(s) || centsOut(s)).as("rev4"),
+        .agg(xsum(graft.expressions.MoneyRound.scaledLong(col("rev"), 10000)).as("rev4"),
           count(lit(1)).as("n_items"))
       val cust = Tables.customer(s, dir)
         .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
@@ -1286,9 +1237,8 @@ object SparkEntry {
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_year"))
         .agg(
-          xsum(when(col("supp_nation") === target, col("vol4")).otherwise(0L),
-            wideSums(s) || centsOut(s)).as("t4"),
-          xsum(col("vol4"), wideSums(s) || centsOut(s)).as("a4"))
+          xsum(when(col("supp_nation") === target, col("vol4")).otherwise(0L)).as("t4"),
+          xsum(col("vol4")).as("a4"))
         .select(col("o_year"),
           // mkt_share is rdiv-exact in every mode; only the revenue CAST
           // carries 2^53 exposure (grouped_revenue row: ~sf19 crossing)
@@ -1325,9 +1275,9 @@ object SparkEntry {
           // centsOut (r18): profit can be NEGATIVE — the sign-symmetric
           // centsIS (HALF_UP away from zero on both engines)
           (if (centsOut(s))
-             centsIS(xsum(col("profit4"), wide = true), 4).as("profit_c2")
+             centsIS(xsum(col("profit4")), 4).as("profit_c2")
            else
-             (xsum(col("profit4"), wideSums(s)).cast("double") / 10000.0).as("profit")),
+             (xsum(col("profit4")).cast("double") / 10000.0).as("profit")),
           count(lit(1)).as("n_items"))
     },
     "q42_cust_order_dist" -> q { (s, dir) =>
@@ -1368,7 +1318,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_cust"),
           // centsOut (r18): segment balances as BIGINT cents, no division
           (if (centsOut(s))
-             xsum(bal2, wide = true).cast("long").as("total_bal_c2")
+             xsum(bal2).cast("long").as("total_bal_c2")
            else (sum(bal2).cast("double") / 100.0).as("total_bal")))
     },
     "q44_rolling_metrics" -> q { (s, dir) =>
@@ -1383,12 +1333,12 @@ object SparkEntry {
         col("ts_us"), graft.expressions.MoneyRound.scaledLong(col("value"), 100).as("v2"))
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
         .rangeBetween(-86400000000L, 0L)
-      // centsOut (r18): frame sum as BIGINT cents (wide window accumulate,
-      // the q77 always-wide rule) instead of the 2^53-bounded double cast
+      // centsOut (r18): frame sum as BIGINT cents (exact window accumulate,
+      // the q77 rule) instead of the 2^53-bounded double cast
       if (centsOut(s))
         ev.select(col("user_id"), col("event_id"), col("ts_us"),
           count(lit(1)).over(w).as("n_24h"),
-          xsum(col("v2"), wide = true).over(w).cast("long").as("sum_value_24h_c2"))
+          xsum(col("v2")).over(w).cast("long").as("sum_value_24h_c2"))
       else
         ev.select(col("user_id"), col("event_id"), col("ts_us"),
           count(lit(1)).over(w).as("n_24h"),
@@ -1451,13 +1401,13 @@ object SparkEntry {
       // calendar distributed-side (rows ∝ output, no driver loop), and the
       // fill is one last(ignoreNulls) running window — every stage keyed
       // by user, so at scale this is co-keyed shuffles + one sort.
-      // centsOut (r18): the daily sum accumulates wide and the LOCF carries
+      // centsOut (r18): the daily sum accumulates exactly and the LOCF carries
       // cents to a BIGINT output — the 2^53 cast escape, in place
       val cents = centsOut(s)
+      val v2 = graft.expressions.MoneyRound.scaledLong(col("value"), 100)
       val daily = Tables.events(s, dir)
         .groupBy(col("user_id"), expr("ts_us div 86400000000").as("day"))
-        .agg(count(lit(1)).as("n_events"),
-          xsum(graft.expressions.MoneyRound.scaledLong(col("value"), 100), wide = cents).as("v2"))
+        .agg(count(lit(1)).as("n_events"), (if (cents) xsum(v2) else sum(v2)).as("v2"))
       val spans = daily.groupBy(col("user_id"))
         .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       val allDays = spans.select(col("user_id"),
@@ -1472,9 +1422,9 @@ object SparkEntry {
            else (filled.cast("double") / 100.0).as("filled_value")))
     },
     "q48_revenue_forecast" -> q((s, dir) =>
-      revenueForecast(s, dir, wide = wideSums(s), cents = centsOut(s))),
+      revenueForecast(s, dir, centsOut(s))),
     "q49_promo_share" -> q((s, dir) =>
-      promoShare(s, dir, wide = wideSums(s), cents = centsOut(s))),
+      promoShare(s, dir, centsOut(s))),
     "q50_rolling_active" -> q { (s, dir) =>
       // DAU / rolling-7-day WAU: count-DISTINCT over a sliding window has
       // no incremental form, so each distinct user-day is exploded onto the
@@ -1514,16 +1464,16 @@ object SparkEntry {
       // scope of TPC-H Q17, not a lineitem-wide aggregate
       val liBrand = li.join(broadcast(brandParts), Seq("l_partkey"), "left_semi")
       val perPart = liBrand.groupBy(col("l_partkey"))
-        .agg(xsum(col("q2"), wideSums(s)).as("sumq2"), count(lit(1)).as("cnt"))
+        .agg(xsum(col("q2")).as("sumq2"), count(lit(1)).as("cnt"))
       val filtered = liBrand.join(broadcast(perPart), Seq("l_partkey"))
         .where(lit(5L) * col("q2") * col("cnt") < col("sumq2"))
-      // centsOut (r18): p2 is already cents — the escape is the wide sum
+      // centsOut (r18): p2 is already cents — the escape is the exact sum
       // cast straight to BIGINT, no division (the q77 sum_base_price rule)
       if (centsOut(s))
-        filtered.agg(xsum(col("p2"), wide = true).cast("long").as("below_avg_revenue_c2"),
+        filtered.agg(xsum(col("p2")).cast("long").as("below_avg_revenue_c2"),
           count(lit(1)).as("n_items"))
       else
-        filtered.agg((xsum(col("p2"), wideSums(s)).cast("double") / 100.0).as("below_avg_revenue"),
+        filtered.agg((xsum(col("p2")).cast("double") / 100.0).as("below_avg_revenue"),
           count(lit(1)).as("n_items"))
     },
     "q54_large_orders" -> q { (s, dir) =>
@@ -1534,7 +1484,7 @@ object SparkEntry {
       val big = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), graft.expressions.MoneyRound.scaledLong(col("l_quantity"), 100).as("q2"))
         .groupBy(col("l_orderkey"))
-        .agg(xsum(col("q2"), wideSums(s)).as("sumq2"), count(lit(1)).as("n_items"))
+        .agg(xsum(col("q2")).as("sumq2"), count(lit(1)).as("n_items"))
         .where(col("sumq2") > 20000L)
       // centsOut (r18): qty is already 1e-2-scaled — BIGINT direct; the
       // sort key is the same exact integer either way
@@ -1571,10 +1521,10 @@ object SparkEntry {
             col("q2").between(2000L, 5000L)))
       // centsOut (r18): HALF_UP cents of the scale-4 volume sum as BIGINT
       if (centsOut(s))
-        matched.agg(centsI(xsum(col("vol4"), wide = true), 4).as("revenue_c2"),
+        matched.agg(centsI(xsum(col("vol4")), 4).as("revenue_c2"),
           count(lit(1)).as("n_items"))
       else
-        matched.agg((xsum(col("vol4"), wideSums(s)).cast("double") / 10000.0).as("revenue"),
+        matched.agg((xsum(col("vol4")).cast("double") / 10000.0).as("revenue"),
           count(lit(1)).as("n_items"))
     },
     "q56_top_supplier" -> q { (s, dir) =>
@@ -1593,7 +1543,7 @@ object SparkEntry {
         .select(col("l_suppkey"),
           graft.expressions.MoneyRound
             .scaledLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 10000).as("vol4"))
-        .groupBy(col("l_suppkey")).agg(xsum(col("vol4"), wideSums(s)).as("rev4"))
+        .groupBy(col("l_suppkey")).agg(xsum(col("vol4")).as("rev4"))
         .localCheckpoint(true)
       rev.join(broadcast(rev.agg(max(col("rev4")).as("mx4"))))
         .where(col("rev4") === col("mx4"))
@@ -1633,7 +1583,7 @@ object SparkEntry {
           // centsOut (r18): the global cube cell is the whole-table qty
           // sum — BIGINT direct in cents mode (cast_double:qty row)
           (if (centsOut(s))
-             xsum(col("q2"), wide = true).cast("long").as("total_qty_c2")
+             xsum(col("q2")).cast("long").as("total_qty_c2")
            else (sum(col("q2")).cast("double") / 100.0).as("total_qty")))
         .select(coalesce(col("p_brand"), lit("ALL")).as("brand"),
           coalesce(col("l_year").cast("string"), lit("ALL")).as("year"),
@@ -1977,7 +1927,7 @@ object SparkEntry {
       // satisfies the groupBy's clustering AND both windows', so the
       // whole chain runs on a single exchange (plan-asserted); the final
       // per-supplier count is a bounded TakeOrdered top-20, never a
-      // global sort. Width-switch audit (r14): nothing to widen here —
+      // global sort. Overflow audit (r14): nothing to widen here —
       // the aggregates are max/count only; a 64-bit COUNT wraps past
       // 9·10¹⁸ ROWS (exabytes), not at any monetary-sum ceiling.
       val perSup = Tables.lineitem(s, dir)
@@ -2130,37 +2080,33 @@ object SparkEntry {
         .select(col("l_partkey").as("p_partkey"),
           col("value38").cast("long").as("value4"))
     },
-    // --- the widened revenue_sum family (r12) -------------------------------
-    // q73–q76: the decimal(38,0) switch applied to the family the sf100
-    // overflow-gate firing actually named (revenue_sum hit 340% of 2⁶³ on
-    // the replication sets — the 64-bit q12-class sums WRAP there). Same
-    // code as the narrow forms via the shared width parameter (xsum);
-    // QueriesSpec pins each ≡ its 64-bit form below the ceiling.
+    // q73–q76: aliases of q12/q16/q48/q49, kept registered (with their
+    // oracles) from when those four summed in 64 bits by default and these
+    // were the exact-sum forms.
     "q73_pricing_summary_wide" -> q((s, dir) =>
-      pricingSummary(s, dir, wide = true, cents = centsOut(s))),
+      pricingSummary(s, dir, centsOut(s))),
     "q74_brand_volume_wide" -> q((s, dir) =>
-      brandVolume(s, dir, wide = true, cents = centsOut(s))),
+      brandVolume(s, dir, centsOut(s))),
     "q75_revenue_forecast_wide" -> q((s, dir) =>
-      revenueForecast(s, dir, wide = true, cents = centsOut(s))),
+      revenueForecast(s, dir, centsOut(s))),
     "q76_promo_share_wide" -> q((s, dir) =>
-      promoShare(s, dir, wide = true, cents = centsOut(s))),
+      promoShare(s, dir, centsOut(s))),
     // q77–q79: the INTEGER-CENTS escapes for the 2^53 cast-fidelity
     // boundary (OverflowAudit's `cast_double:cents2` row, ADVICE r15 /
-    // VERDICT r16 task 1). The wide switch moves where the SUM lives; the
+    // VERDICT r16 task 1). The exact sum has no 64-bit ceiling, but the
     // final `.cast("double")/10^s` still rounds once the integer passes
     // 2^53 (~sf285 for q12's charge cents, measured 70% at sf200, fired
     // in anger at sf300) — drift, not garbage, and still hash-identical
     // cross-engine, but no longer the exact ledger amount. These forms
     // emit the HALF_UP cents themselves as BIGINT (exact until 2^63 cents
-    // ≈ 9.2e16 dollars, ~10^3× the 2^53 line) and always sum wide — they
-    // exist precisely for deployments past the narrow regime. One per
+    // ≈ 9.2e16 dollars, ~10^3× the 2^53 line). One per
     // alarm-row family: q77 ← q12/q73 (pricing summary), q78 ← q13
     // (region revenue), q79 ← q16/q74 (brand volume). The engine-level
     // GRAFT_CENTS_OUT / spark.graft.centsOut switch routes the original
     // five members to these same output forms in place ([[centsOut]]).
-    "q77_pricing_summary_cents" -> q(pricingSummary(_, _, wide = true, cents = true)),
-    "q78_region_revenue_cents" -> q(regionRevenue(_, _, wide = true, cents = true)),
-    "q79_brand_volume_cents" -> q(brandVolume(_, _, wide = true, cents = true)),
+    "q77_pricing_summary_cents" -> q(pricingSummary(_, _, cents = true)),
+    "q78_region_revenue_cents" -> q(regionRevenue(_, _, cents = true)),
+    "q79_brand_volume_cents" -> q(brandVolume(_, _, cents = true)),
     // q80/q81 (r18, VERDICT r17 item 3): the registered always-on cents
     // representatives for the OTHER two 2^53 rows — `cast_double:value_sums`
     // (q48/q75, plus q53/q55 routed in place) and `cast_double:event_value`
@@ -2168,7 +2114,7 @@ object SparkEntry {
     // cents forms flip under the same GRAFT_CENTS_OUT switch and verify
     // against their own HUGEINT oracles via oracleSqlFor — one registered
     // escape per family proves the form cross-engine; the switch covers all.
-    "q80_revenue_forecast_cents" -> q(revenueForecast(_, _, wide = true, cents = true)),
+    "q80_revenue_forecast_cents" -> q(revenueForecast(_, _, cents = true)),
     "q81_tumbling_daily_cents" -> q(tumblingDaily(_, _, cents = true)),
     "q69_kmv_intersection" -> q { (s, dir) =>
       // sketch set-algebra completed: INTERSECTION cardinality from two
@@ -2238,11 +2184,11 @@ object SparkEntry {
       val perPS = li.join(bolts, col("l_partkey") === col("p_partkey"))
         .repartition(col("l_partkey"))
         .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(xsum(col("q_c"), wideSums(s)).as("ps_qty"))
+        .agg(xsum(col("q_c")).as("ps_qty"))
       val excess = perPS
-        // the per-part window total follows ps_qty's width automatically:
-        // sum over a decimal(38,0) input stays decimal(38,0), so one xsum
-        // above widens the whole gate chain
+        // the per-part window total follows ps_qty's type: sum over a
+        // decimal(38,0) input stays decimal(38,0), so the whole gate chain
+        // is exact
         .withColumn("p_qty", sum(col("ps_qty")).over(Window.partitionBy(col("l_partkey"))))
         .where(col("ps_qty") * 2 > col("p_qty"))
         .select(col("l_suppkey")).distinct()
@@ -2460,12 +2406,9 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = {
     val base = oracleSqlBase
-    // The q73–q76 widened variants re-narrow to the exact same rounded
-    // output wherever 64-bit hasn't wrapped, and DuckDB's sum over BIGINT
-    // is NATIVELY HUGEINT (128-bit, exact) — the narrow oracle text already
-    // computes the WIDE semantics, so it is the wide oracle verbatim. (At
-    // test SF both engines agree with the narrow Spark form too; past the
-    // ceiling only the wide form matches DuckDB — that is the point.)
+    // q73–q76 alias q12/q16/q48/q49, so they share those oracle texts
+    // (DuckDB's sum over BIGINT is natively HUGEINT, the exact sum's
+    // semantics).
     base ++ Map(
       "q73_pricing_summary_wide" -> base("q12_pricing_summary"),
       "q74_brand_volume_wide" -> base("q16_brand_volume"),
@@ -2520,10 +2463,7 @@ object SparkEntry {
     * OUTPUT FORM of q12/q73, q13 and q16/q74 (BIGINT `_c2` columns, avg
     * columns omitted), so their dollar-form oracle texts cannot match a
     * cents-mode dump — remap them to the registered cents oracles, the
-    * same texts q77/q78/q79 verify against. The WIDE switch needs no
-    * remap: DuckDB's BIGINT sums are natively HUGEINT, so the narrow
-    * oracle text already computes the wide semantics (the q73→q12 rule
-    * above). Verify writes this map, so a GRAFT_CENTS_OUT=1 sweep
+    * same texts q77/q78/q79 verify against. Verify writes this map, so a GRAFT_CENTS_OUT=1 sweep
     * compares every routed member against the form it actually emitted. */
   def oracleSqlFor(centsOn: Boolean): Map[String, String] = {
     val base = oracleSql

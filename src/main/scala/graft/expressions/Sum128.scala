@@ -7,13 +7,14 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** Exact 128-bit sum of a long column, as a DeclarativeAggregate over a
-  * (hi, lo) two-long buffer — the engine's wide-sum fast path (r18).
+  * (hi, lo) two-long buffer — the engine's one money-sum path
+  * (`SparkEntry.xsum`, r18).
   *
   * Why not `sum(cast(x as decimal(38,0)))` (the form this replaces): a
   * decimal(38,0) aggregation buffer is 16 opaque bytes whose per-row add
   * goes through Decimal/BigDecimal object arithmetic once group sums pass
   * the compact-long range — measured r18 at sf0.1 as a uniform
-  * +0.2–0.35 s on every wide-family query (q74−q16 = +0.34 s on an
+  * +0.2–0.35 s on every exact-sum query (q74−q16 = +0.34 s on an
   * identical plan). Here the buffer is two primitive longs updated with
   * pure bitwise/add expressions inside whole-stage codegen (carry =
   * `((a&b) | ((a|b) & ~s)) >>> 63`, the standard unsigned carry-out),

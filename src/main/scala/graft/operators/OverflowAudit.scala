@@ -7,42 +7,26 @@ import graft.Tables
 
 /** Deployment-time guard for the scaled-integer exactness contract.
   *
-  * The engine's determinism contract is "64-bit sums of scaled integers"
-  * (SURVEY §4): every exact-arithmetic family has a documented overflow
-  * ceiling, reached only 100–1000× beyond the verified SF range. The audit
-  * here turns that prose into a check a deployment can RUN against its
-  * actual data: each family's worst-case 64-bit magnitude is computed from
-  * the loaded tables' true row counts and maxima (in decimal(38,0), so the
-  * audit itself cannot wrap), and anything past 10% of the 2⁶³−1 ceiling
-  * fails loudly — the "flip the documented widening switch" moment is
-  * detected, not remembered.
+  * The engine's determinism contract is "exact sums of scaled integers"
+  * (SURVEY §4). Every grouped revenue/value/interval sum runs through
+  * `SparkEntry.xsum`'s 128-bit Sum128, so no registered money sum has a
+  * 64-bit ceiling any more. What is left to guard: 64-bit arithmetic that
+  * is NOT a Sum128 aggregate, and the double cast every dollar-form output
+  * ends in. The audit turns both into a check a deployment can RUN against
+  * its actual data: each row's worst-case magnitude is computed from the
+  * loaded tables' true row counts and maxima (in decimal(38,0), so the
+  * audit itself cannot wrap), and a crossing fails loudly instead of being
+  * remembered.
   *
-  * Rows (the §4 audit, mechanized — r14 splits each family into its
-  * registered GROUPING CLASSES so the alarm names the queries that cross,
-  * not a global ceiling no registered grouping reaches):
-  *  - `revenue_sum` — the family's global ceiling (q12's sum_charge
-  *    product, the largest per-row term; bounds the global-sum members
-  *    q12/q48/q53/q55).
-  *  - `revenue_sum:{nation,brand,shipyear,suppkey,custkey,orderkey,
-  *    orderyear,suppnation}_group` — max per-GROUP sum of each registered
-  *    grouping over its own join (q13/q34, q16, q49, q29/q56, q35,
-  *    q32/q54, q40, q41), measured on the 1e-4-scaled 2-FACTOR term those
-  *    members actually sum (vol4-class; suppnation bounds q41's profit4
-  *    with vol4+cost4+2) —
-  *    ~100× below the charge-term family ceiling, so the grouped classes
-  *    stay exact decades past the global alarm (nation, the coarsest,
-  *    reads ~0.15% of 2⁶³ at sf100 and wraps only near sf70000). The
-  *    grouped rows' r14 job is as much REMOVING that false alarm as
-  *    raising a true one: the members the global row names (q12's
-  *    near-global charge sums, ~57% of 2⁶³ per group at sf100, wrapping
-  *    near sf175) are the ones that actually need the switch first.
-  *  - `totalprice_sum:priority_group` (q17), `acctbal_sum` (q18 — the
-  *    rollup's grand-total row IS the global sum), `qty_sum` (q1-style).
+  * Rows:
   *  - `gate_cross_mult` — q68's value4·n_parts vs 2·total4 integer gate:
-  *    both factors grow with SF, so this family hits the ceiling first
-  *    under TPC-H-style scaling (~sf100 where linear sums last to
-  *    ~sf1000); its escape is the registered q72 wide form, NOT the
-  *    engine switch, so it gates regardless of wide mode.
+  *    64-bit longs (plain `sum`, then cross-multiplication), and both
+  *    factors grow with SF, so this hits 10% of 2⁶³ near sf100. Its escape
+  *    is the registered q72 decimal(38,0) form.
+  *  - `cast_double:*` — the 2^53 output-cast rows (see [[Ceiling53]]),
+  *    each bounding the exact integer that enters a member's final
+  *    `.cast("double") / 10^s`; the escape is the integer-cents output
+  *    (GRAFT_CENTS_OUT).
   * Sketch/hash arithmetic (KMV, Bloom, band keys) is scale-independent —
   * bounded by k/mBits/2⁶⁴, never by data volume — and has no audit entry.
   *
@@ -54,14 +38,14 @@ import graft.Tables
   * Σ|term| ≥ 2⁶³; with per-row |term| ≤ B (a data-independent bound) the
   * sum is LINEAR in rows and the ceiling sits at 2⁶³/B rows — for every
   * monetary/qty/value term (B ≤ ~10¹¹ for the 3-factor charge) that is
-  * sf10³–10⁵ and the families above measure it. A sum is SUPERLINEAR only
-  * when the TERM itself grows with the dataset, which in this engine can
-  * arise four ways: (1) a timestamp/sequence delta against a global
-  * extremum, (2) a rank/row_number-derived term, (3) a product of two
-  * aggregates, (4) a cumulative sum re-summed. The r16 pass over every
-  * registered aggregate (SparkEntry + the operators and streaming trees):
-  *  - class (1): q27's `max(ts)−ts_us` — the ONLY member; audited
-  *    (`age_sum:eventtype_group`, xsum-swept). q15/q45's lag/min deltas
+  * sf10³–10⁵. A sum is SUPERLINEAR only when the TERM itself grows with
+  * the dataset, which in this engine can arise four ways: (1) a
+  * timestamp/sequence delta against a global extremum, (2) a
+  * rank/row_number-derived term, (3) a product of two aggregates, (4) a
+  * cumulative sum re-summed. The r16 pass over every registered aggregate
+  * (SparkEntry + the operators and streaming trees):
+  *  - class (1): q27's `max(ts)−ts_us` — the ONLY member; it sums through
+  *    Sum128, so it has no 64-bit ceiling. q15/q45's lag/min deltas
   *    are compared or flag-summed, never magnitude-summed; q44/q47 and
   *    the streaming TrailingWindow/StatefulSessions sum bounded `v2`
   *    terms over span-bounded frames (24h/day/session), so their frame
@@ -74,19 +58,18 @@ import graft.Tables
   *    decimal(38,0) for the same reason.)
   *  - class (4): no member — Binning/Sampling's cumulative offsets
   *    (`_off`, sequence-pack token cumsums) are bounded by the GLOBAL
-  *    total of a bounded per-row term (≤ total rows × B, the linear
-  *    class measured by their family rows) and are consumed as values,
-  *    never re-summed.
+  *    total of a bounded per-row term (≤ total rows × B) and are consumed
+  *    as values, never re-summed.
   *  - everything else sums terms bounded per row: scaled prices/
-  *    quantities/values (the measured families), counts/flags (Σ ≤ rows;
-  *    2⁶³ rows ≈ 9.2e18 ≫ any deployment), per-doc token/length stats
-  *    (B ≤ doc size), embedding components (|x6| ≤ 1e6 per dim — Lloyd/
-  *    s11 state), payload bytes (B = row payload).
-  * Claim: every span-growing 64-bit sum family has an audit row. A NEW
+  *    quantities/values (Sum128, or a plain 64-bit `sum` linear in rows),
+  *    counts/flags (Σ ≤ rows; 2⁶³ rows ≈ 9.2e18 ≫ any deployment),
+  *    per-doc token/length stats (B ≤ doc size), embedding components
+  *    (|x6| ≤ 1e6 per dim — Lloyd/s11 state), payload bytes (B = row
+  *    payload).
+  * Claim: every span-growing 64-bit step has an audit row. A NEW
   * aggregate joins the audit iff its per-row term derives from a global
-  * extremum delta, a rank, an aggregate product, or a re-summed cumsum —
-  * the four shapes above; bounded-term sums stay covered by their
-  * family's linear rows.
+  * extremum delta, a rank, an aggregate product, or a re-summed cumsum
+  * and it does not sum through Sum128.
   */
 object OverflowAudit {
 
@@ -108,15 +91,10 @@ object OverflowAudit {
     * data. `fraction` is worst/2⁶³; [[ok]] holds while it stays under the
     * 10% alarm line.
     *
-    * `queries` names the registered SparkEntry queries whose 64-bit
-    * arithmetic this row bounds — the r13 granularity fix: an exit-2 report
-    * now says WHICH queries cross at the deployment's SF instead of one
-    * global family alarm that sf10+ automation learns to ignore.
-    * `wideSwitchCovers` marks rows whose members all aggregate through
-    * `SparkEntry.xsum`: with the engine-level GRAFT_WIDE_SUMS switch ON
-    * those members have no 64-bit ceiling left, so the row stops gating
-    * ([[gates]]); rows with a separate escape (q68's long gate → the q72
-    * registered wide form) keep gating regardless.
+    * `queries` names the registered SparkEntry queries whose arithmetic
+    * this row bounds — the r13 granularity fix: an exit-2 report says
+    * WHICH queries cross at the deployment's SF instead of one global
+    * family alarm that sf10+ automation learns to ignore.
     *
     * `worst = None` means the audit could not measure the family — a null
     * aggregate over NON-EMPTY input (all-null terms, or the audit's own
@@ -128,35 +106,31 @@ object OverflowAudit {
     * render says UNMEASURABLE instead of silently reporting zero.
     */
   final case class Headroom(family: String, worst: Option[BigDecimal],
-      queries: Seq[String] = Nil, wideSwitchCovers: Boolean = false,
+      queries: Seq[String] = Nil,
       ceiling: BigDecimal = Ceiling, alarmAt: Double = 0.10,
       // r17 (VERDICT r16 task 1): rows whose EVERY member has a registered
       // integer-cents output form routed by the engine-level GRAFT_CENTS_OUT
       // switch (SparkEntry.centsOut) — the 2^53 cast-fidelity escape. With
       // that switch on the members' final `.cast(double)/10^s` no longer
-      // exists, so the row stops gating (same measured-crossing-only rule
-      // as wideSwitchCovers).
+      // exists, so the row stops gating.
       centsSwitchCovers: Boolean = false) {
     def fraction: Double = worst.map(w => (w / ceiling).toDouble).getOrElse(Double.NaN)
     // NaN < alarmAt is false, so the unmeasurable case stays failed-closed.
     def ok: Boolean = fraction < alarmAt
     /** Whether a crossed row should still trip the deployment gate given
-      * the engine-level switch states (wide sums; integer-cents output).
-      * Only a MEASURED crossing is releasable: an UNMEASURABLE row
-      * (worst = None) signals the audit itself failed — all-null terms or
-      * the audit's own decimal arithmetic wrapping — which is a
-      * measurement/data anomaly no switch removes, so it gates in every
-      * mode (ADVICE r14: releasing it would silently lose the fail-closed
-      * property for wide deployments). */
-    def gates(wideSumsOn: Boolean, centsOutOn: Boolean = false): Boolean =
-      !(((wideSumsOn && wideSwitchCovers) || (centsOutOn && centsSwitchCovers))
-        && worst.isDefined)
+      * the integer-cents output switch. Only a MEASURED crossing is
+      * releasable: an UNMEASURABLE row (worst = None) signals the audit
+      * itself failed — all-null terms or the audit's own decimal arithmetic
+      * wrapping — which is a measurement/data anomaly no switch removes,
+      * so it gates in every mode (ADVICE r14). */
+    def gates(centsOutOn: Boolean): Boolean =
+      !(centsOutOn && centsSwitchCovers && worst.isDefined)
     override def toString: String = {
       val qs = if (queries.isEmpty) "" else queries.mkString(" [", ",", "]")
-      val cov = (if (wideSwitchCovers) " escape=GRAFT_WIDE_SUMS=1" else "") +
-        (if (centsSwitchCovers)
-           " escape=GRAFT_CENTS_OUT=1 (integer-cents output forms; registered escapes q77-q81)"
-         else "")
+      val cov =
+        if (centsSwitchCovers)
+          " escape=GRAFT_CENTS_OUT=1 (integer-cents output forms; registered escapes q77-q81)"
+        else ""
       val ceil = if (ceiling == Ceiling53) "2^53" else "2^63"
       worst match {
         case Some(w) => f"$family: worst=$w%.3e (${fraction * 100}%.4f%% of $ceil, alarm at ${alarmAt * 100}%.0f%%)$qs$cov"
@@ -172,7 +146,7 @@ object OverflowAudit {
     * worst case) is unmeasurable and fails closed (see [[Headroom]]).
     */
   def sumHeadroom(family: String, df: DataFrame, term: Column,
-      queries: Seq[String] = Nil, wideSwitchCovers: Boolean = false): Headroom = {
+      queries: Seq[String] = Nil): Headroom = {
     val t = abs(term).cast("decimal(38,0)")
     val r = df.agg(sum(t).as("s"), count(lit(1)).as("n"), count(t).as("nn")).head()
     val rows = r.getLong(1)
@@ -180,7 +154,7 @@ object OverflowAudit {
       if (rows == 0L) Some(BigDecimal(0))
       else if (r.getLong(2) != rows) None // per-row nulls dropped by sum
       else Option(r.getDecimal(0)).map(BigDecimal(_))
-    Headroom(family, worst, queries, wideSwitchCovers)
+    Headroom(family, worst, queries)
   }
 
   /** Worst-case magnitude of a GROUPED 64-bit sum: max over groups of
@@ -195,12 +169,7 @@ object OverflowAudit {
     * closed.
     */
   def groupedSumHeadroom(family: String, df: DataFrame, groupCols: Seq[Column],
-      term: Column, queries: Seq[String] = Nil,
-      // no default: whether the engine-level switch releases this row from
-      // the gate is safety-critical — a forgotten-to-sweep member must not
-      // fail OPEN by omission (sumHeadroom defaults false for the same
-      // reason; this one forces the caller to decide)
-      wideSwitchCovers: Boolean): Headroom = {
+      term: Column, queries: Seq[String] = Nil): Headroom = {
     val t = abs(term).cast("decimal(38,0)")
     val per = df.groupBy(groupCols: _*)
       .agg(sum(t).as("s"), count(lit(1)).as("n"), count(t).as("nn"))
@@ -212,7 +181,7 @@ object OverflowAudit {
       if (groups == 0L) Some(BigDecimal(0))
       else if (r.getLong(1) != groups || r.getLong(3) != r.getLong(4)) None
       else Option(r.getDecimal(0)).map(BigDecimal(_))
-    Headroom(family, worst, queries, wideSwitchCovers)
+    Headroom(family, worst, queries)
   }
 
   /** Worst-case magnitude of an integer cross-multiplication gate
@@ -237,28 +206,25 @@ object OverflowAudit {
 
   private def c2(c: Column): Column = round(c * lit(100)).cast("decimal(38,0)")
 
-  /** The full audit over a loaded testdata/deployment directory: the global
-    * family ceilings plus one row per (family, grouping-class) of the
-    * registered grouped queries (the r13 granularity fix). Every row names
-    * its member queries; rows whose members ride the engine-level
-    * wide-sums switch are marked so [[Headroom.gates]] can release them
-    * when GRAFT_WIDE_SUMS is on. Grouped rows measure the query's OWN
-    * arithmetic — its grouping keys over its own join — as an unfiltered
-    * upper bound (a query's extra filters only shrink its groups).
+  /** The full audit over a loaded testdata/deployment directory: q68's
+    * gate plus one 2^53 row per output-cast class. Every row names its
+    * member queries. Grouped measurements are the query's OWN arithmetic —
+    * its grouping keys over its own join — as an unfiltered upper bound (a
+    * query's extra filters only shrink its groups).
     */
   def audit(spark: SparkSession, dir: String): Seq[Headroom] = {
     val li = Tables.lineitem(spark, dir)
     val ord = Tables.orders(spark, dir)
     // q12's sum_charge product is the largest per-row revenue-family term;
-    // the global row is the family ceiling (q12's 6 returnflag×linestatus
-    // groups sit within ~6× of it; q48/q53/q55's global sums below it)
+    // its global sum bounds every cents2 member's per-group sum (q12's 6
+    // returnflag×linestatus groups sit within ~6× of it)
     val charge = c2(col("l_extendedprice")) *
       (lit(100) - c2(col("l_discount"))) * (lit(100) + c2(col("l_tax")))
-    val revenue = sumHeadroom("revenue_sum", li, charge,
-      queries = Seq("q12", "q48", "q53", "q55"), wideSwitchCovers = true)
-    val qty = sumHeadroom("qty_sum", li, c2(col("l_quantity")),
-      queries = Seq("q12"), wideSwitchCovers = true)
+    val revenue = sumHeadroom("revenue_sum", li, charge)
 
+    // The grouped sums below are measurements, not rows: their members sum
+    // through Sum128 (no 2⁶³ ceiling), and their worsts bound the
+    // grouped/entity cast_double rows further down.
     // the 1e-4-scaled revenue term shared by the grouped members
     val vol4 = round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 10000)
       .cast("long")
@@ -297,17 +263,14 @@ object OverflowAudit {
       .localCheckpoint(true)
     val cellSum = when(col("ntv") =!= col("n"), lit(null)).otherwise(col("sv"))
     val custkey = groupedSumHeadroom("revenue_sum:custkey_group", perCell,
-      Seq(col("o_custkey")), cellSum, queries = Seq("q35"),
-      wideSwitchCovers = true)
+      Seq(col("o_custkey")), cellSum, queries = Seq("q35"))
     val orderyear = groupedSumHeadroom("revenue_sum:orderyear_group", perCell,
-      Seq(col("o_year")), cellSum, queries = Seq("q40"),
-      wideSwitchCovers = true)
+      Seq(col("o_year")), cellSum, queries = Seq("q40"))
     val nation = groupedSumHeadroom("revenue_sum:nation_group",
       perCell.join(Tables.customer(spark, dir)
           .select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey")),
-      Seq(col("c_nationkey")), cellSum,
-      queries = Seq("q13", "q34"), wideSwitchCovers = true)
+      Seq(col("c_nationkey")), cellSum, queries = Seq("q13", "q34"))
     // q41 groups by SUPPLIER nation (× order year, which only splits
     // finer), summing profit4 = round((price·(1−disc) − 0.1·retail·qty)
     // ·1e4) — neither a customer-nation nor a vol4 class (ADVICE r14). Its
@@ -328,7 +291,7 @@ object OverflowAudit {
             .select(col("s_suppkey"), col("s_nationkey"))),
           col("l_suppkey") === col("s_suppkey")),
       Seq(col("s_nationkey")), abs(vol4) + abs(cost4) + lit(2L),
-      queries = Seq("q41"), wideSwitchCovers = true)
+      queries = Seq("q41"))
     // orderkey/suppkey/shipyear deliberately re-scan lineitem rather than
     // share one checkpointed projection: materializing a 600M-row 4-column
     // frame (~24 GB of blocks at sf100) costs more than two extra
@@ -336,34 +299,11 @@ object OverflowAudit {
     // shared frame is POST-aggregation (|custkeys| rows) — the d11/s09 rule
     // applies to small derived frames, not to fact projections.
     val orderkey = groupedSumHeadroom("revenue_sum:orderkey_group", li,
-      Seq(col("l_orderkey")), vol4, queries = Seq("q32", "q54"),
-      wideSwitchCovers = true)
+      Seq(col("l_orderkey")), vol4, queries = Seq("q32", "q54"))
     val suppkey = groupedSumHeadroom("revenue_sum:suppkey_group", li,
-      Seq(col("l_suppkey")), vol4, queries = Seq("q29", "q56"),
-      wideSwitchCovers = true)
+      Seq(col("l_suppkey")), vol4, queries = Seq("q29", "q56"))
     val yearly = groupedSumHeadroom("revenue_sum:shipyear_group", li,
-      Seq(year(col("l_shipdate"))), vol4, queries = Seq("q49"),
-      wideSwitchCovers = true)
-    // brand row pre-aggregates on partkey below the part join (same rule:
-    // the dimension joins 1-row-per-part aggregates, never the fact scan)
-    val perPartVol = li
-      .select(col("l_partkey"), abs(vol4).cast("decimal(38,0)").as("tv"))
-      .groupBy(col("l_partkey"))
-      .agg(sum(col("tv")).as("spv"), count(lit(1)).as("n"), count(col("tv")).as("ntv"))
-    val brand = groupedSumHeadroom("revenue_sum:brand_group",
-      perPartVol.join(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey")),
-      Seq(col("p_brand")),
-      when(col("ntv") =!= col("n"), lit(null)).otherwise(col("spv")),
-      queries = Seq("q16"), wideSwitchCovers = true)
-    val priority = groupedSumHeadroom("totalprice_sum:priority_group", ord,
-      Seq(col("o_orderpriority")), c2(col("o_totalprice")), queries = Seq("q17"),
-      wideSwitchCovers = true)
-    // q18's rollup includes the grand-total row, so its worst group IS the
-    // global acctbal sum — a plain global headroom bounds it exactly
-    val acctbal = sumHeadroom("acctbal_sum", Tables.customer(spark, dir),
-      c2(col("c_acctbal")), queries = Seq("q18"), wideSwitchCovers = true)
+      Seq(year(col("l_shipdate"))), vol4, queries = Seq("q49"))
     // q68's gate: per-part value4 (Σ q_c·price_c over the part's shipments,
     // here bounded by the UNFILTERED per-part aggregate — the audited worst
     // case over any nation filter) cross-multiplied with the part count
@@ -394,33 +334,17 @@ object OverflowAudit {
       if (np == 0) Some(BigDecimal(0))
       else if (!allMeasured) None
       else for { t <- tot; m <- mv } yield (m * np).max(t * 2)
-    // NOT wide-switch-covered: q68's escape is the registered q72 wide
-    // form (the gate is long cross-multiplication, not an xsum aggregate)
+    // q68's escape is the registered q72 decimal form (the gate is long
+    // cross-multiplication, not an xsum aggregate)
     val gate = Headroom("gate_cross_mult", gateWorst, queries = Seq("q68"))
-    // q27's event-age sums: Σ(max(ts)−ts_us) per event_type — an INTERVAL
-    // family, not a monetary one, and the engine's EARLIEST 64-bit
-    // crossing: the per-row term grows with the data's time span while the
-    // row count grows with volume, so the sum scales ~quadratically in SF
-    // on the replication sets (span × rows) where the monetary families
-    // scale linearly. Measured 0.29% of 2⁶³ at sf0.1 → past 100% near
-    // sf35 → 573% at sf200, where narrow q27 was the suite's one silently
-    // garbage answer (caught r15 by the sf200 probe; every monetary
-    // family's worst REGISTERED grouping was still under 62% there).
-    // q27 aggregates through xsum, so the engine switch releases it.
     val ev = Tables.events(spark, dir)
-    val mxTs = ev.agg(max(col("ts_us")).as("mx"))
-    val age = groupedSumHeadroom("age_sum:eventtype_group",
-      ev.select(col("event_type"), col("ts_us")).crossJoin(broadcast(mxTs)),
-      Seq(col("event_type")), col("mx") - col("ts_us"),
-      queries = Seq("q27"), wideSwitchCovers = true)
     // --- the 2^53 cast-fidelity rows (ADVICE r15 / the cents2 boundary) --
     // Every output ends in `.cast("double") / 10^s`; these rows watch the
     // INTEGER magnitude that enters that cast (see [[Ceiling53]]: alarm at
     // the true 100% boundary — drift, not garbage, and still hash-
     // identical cross-engine). Escape: emit the scaled integer itself (the
-    // registered q77 integer-cents form), NOT the wide-sums switch — a
-    // decimal(38,0) buffer only moves where the sum lives, the final
-    // double cast still rounds. Coverage rule: a grouped/framed cast is
+    // registered q77 integer-cents form) — an exact Sum128 only moves
+    // where the sum lives, the final double cast still rounds. Coverage rule: a grouped/framed cast is
     // bounded by its family's GLOBAL row (terms are nonnegative), so the
     // global rows here bound q13/q16/q74's per-group cents, q54's
     // per-order qty, q44/q47's per-user/day frames, etc.
@@ -429,8 +353,8 @@ object OverflowAudit {
     // row-wise) sits under the same bound.
     // Every cents2 member has its integer-cents escape (r17): the
     // engine-level GRAFT_CENTS_OUT switch routes q12/q73 → q77's form,
-    // q13 → q78's, q16/q74 → q79's (HALF_UP cents as BIGINT, always-wide
-    // sums — no double cast left), so this row releases under that switch.
+    // q13 → q78's, q16/q74 → q79's (HALF_UP cents as BIGINT — no double
+    // cast left), so this row releases under that switch.
     val centsDouble = Headroom("cast_double:cents2",
       revenue.worst.map(_ / BigDecimal(10000)),
       queries = Seq("q12", "q13", "q16", "q73", "q74"),
@@ -498,8 +422,8 @@ object OverflowAudit {
       queries = Seq("q11", "q22", "q23", "q30", "q44", "q47"))
       .copy(ceiling = Ceiling53, alarmAt = 1.0, centsSwitchCovers = true)
     // --- r18 wave 2: the remaining grouped/entity output casts ----------
-    // Each row REUSES a grouped worst already measured for the 2^63 sum
-    // audit above (zero extra scan cost) and compares it to 2^53 — the
+    // Each row takes the max of grouped worsts measured above and compares
+    // it to 2^53 — the
     // grouped revenue classes (fixed group counts, linearly growing sums)
     // cross FIRST of all cast families: orderyear 4.8e12 at sf0.01 →
     // ~sf19; suppnation ~sf28; nation ~sf60. Every member routes to an
@@ -523,21 +447,15 @@ object OverflowAudit {
       ceiling = Ceiling53, alarmAt = 1.0, centsSwitchCovers = true)
     // q18's rollup grand-total IS the global acctbal sum (tight); q43's
     // segments partition a filtered subset of the same rows (≤ global)
-    val acctbalDouble = acctbal
-      .copy(family = "cast_double:acctbal", queries = Seq("q18", "q43"),
-        ceiling = Ceiling53, alarmAt = 1.0,
-        // a cast row: the WIDE switch must not release it (inherited true
-        // from the sum row would — widening cannot un-round the cast)
-        wideSwitchCovers = false, centsSwitchCovers = true)
+    val acctbalDouble = sumHeadroom("cast_double:acctbal", Tables.customer(spark, dir),
+      c2(col("c_acctbal")), queries = Seq("q18", "q43"))
+      .copy(ceiling = Ceiling53, alarmAt = 1.0, centsSwitchCovers = true)
     // q59's ALL/ALL cube cell is exactly the global qty sum; q54's
     // per-order frames sit far under it
-    val qtyDouble = qty
-      .copy(family = "cast_double:qty", queries = Seq("q54", "q59"),
-        ceiling = Ceiling53, alarmAt = 1.0,
-        wideSwitchCovers = false, centsSwitchCovers = true)
-    Seq(revenue, nation, brand, yearly, suppkey, custkey, orderkey,
-      orderyear, suppnation, priority, acctbal, qty, age, gate,
-      centsDouble, valueDouble, evDouble,
+    val qtyDouble = sumHeadroom("cast_double:qty", li, c2(col("l_quantity")),
+      queries = Seq("q54", "q59"))
+      .copy(ceiling = Ceiling53, alarmAt = 1.0, centsSwitchCovers = true)
+    Seq(gate, centsDouble, valueDouble, evDouble,
       groupedRevDouble, entityRevDouble, acctbalDouble, qtyDouble)
   }
 
@@ -547,8 +465,8 @@ object OverflowAudit {
     import spark.implicits._
     audit(spark, dir)
       .map(h => (h.family, h.worst.map(_.toDouble).getOrElse(Double.NaN), h.fraction,
-        h.ok, h.queries.mkString(","), h.wideSwitchCovers, h.centsSwitchCovers))
+        h.ok, h.queries.mkString(","), h.centsSwitchCovers))
       .toDF("family", "worst_case", "fraction_of_ceiling", "ok",
-        "queries", "wide_switch_covers", "cents_switch_covers")
+        "queries", "cents_switch_covers")
   }
 }

@@ -25,17 +25,21 @@ object RowFilter {
   /** Compile a filter document (JSON text) to a boolean Column. */
   def compile(json: String): Column = compileDoc(JsonMethods.parse(json))
 
+  /** The reference evaluator's `all`/`any` over a possibly empty list: an
+    * empty conjunction keeps every row, an empty disjunction none. */
+  private def all(cs: Seq[Column]): Column = cs.reduceOption(_ && _).getOrElse(lit(true))
+  private def any(cs: Seq[Column]): Column = cs.reduceOption(_ || _).getOrElse(lit(false))
+
   private def compileDoc(doc: JValue): Column = doc match {
-    case JObject(fields) if fields.isEmpty => lit(true)
     case JObject(fields) =>
-      fields.map {
-        case ("$and", JArray(subs)) => subs.map(compileDoc).reduce(_ && _)
-        case ("$or", JArray(subs))  => subs.map(compileDoc).reduce(_ || _)
+      all(fields.map {
+        case ("$and", JArray(subs)) => all(subs.map(compileDoc))
+        case ("$or", JArray(subs))  => any(subs.map(compileDoc))
         case (key, ops) if key.startsWith("data.") =>
           compileColumnOps(col(key.stripPrefix("data.")), ops)
         case (key, _) =>
           throw new IllegalArgumentException(s"Unknown filter key: $key")
-      }.reduce(_ && _)
+      })
     case other =>
       throw new IllegalArgumentException(s"Filter document must be an object, got $other")
   }
@@ -67,7 +71,7 @@ object RowFilter {
 
   private def compileColumnOps(c: Column, ops: JValue): Column = ops match {
     case JObject(fields) =>
-      fields.map {
+      all(fields.map {
         case ("$in", JArray(vs))  => inList(c, vs.map(toLiteral))
         case ("$nin", JArray(vs)) => notInList(c, vs.map(toLiteral))
         case ("$lt", v)           => c < toLiteral(v)
@@ -78,7 +82,7 @@ object RowFilter {
         case ("$ne", v)           => neTo(c, toLiteral(v))
         case (op, _) =>
           throw new IllegalArgumentException(s"Unknown filter operator: $op")
-      }.reduce(_ && _)
+      })
     case v => eqTo(c, toLiteral(v)) // bare value = equality, mongo-style
   }
 

@@ -57,19 +57,27 @@ class GraftSettingsSpec extends SparkSpec {
     assert(GraftSettings(Map.empty[String, String]).cuMetric.isEmpty)
   }
 
-  test("engine switches parse their env forms: GRAFT_WIDE_SUMS / GRAFT_CENTS_OUT") {
+  test("env flags parse one way: GRAFT_CENTS_OUT / SKIP_FULL_IMPORT") {
     // the conf-override path is pinned in QueriesSpec; this pins the env
-    // default both switches fall back to (deployment's documented home)
-    for (v <- Seq("1", "true", "TRUE")) {
-      assert(GraftSettings(Map("GRAFT_WIDE_SUMS" -> v)).wideSums, s"wideSums($v)")
+    // default (deployment's documented home) and the one flag parse both
+    // switches share
+    for (v <- Seq("1", "true", "TRUE", " True ")) {
       assert(GraftSettings(Map("GRAFT_CENTS_OUT" -> v)).centsOut, s"centsOut($v)")
+      assert(GraftSettings(Map("SKIP_FULL_IMPORT" -> v)).skipFullImport, s"skipFullImport($v)")
     }
     for (v <- Seq("0", "false", "", "yes")) {
-      assert(!GraftSettings(Map("GRAFT_WIDE_SUMS" -> v)).wideSums, s"wideSums($v)")
       assert(!GraftSettings(Map("GRAFT_CENTS_OUT" -> v)).centsOut, s"centsOut($v)")
+      assert(!GraftSettings(Map("SKIP_FULL_IMPORT" -> v)).skipFullImport, s"skipFullImport($v)")
     }
-    assert(!GraftSettings(Map.empty[String, String]).wideSums)
     assert(!GraftSettings(Map.empty[String, String]).centsOut)
+    assert(!GraftSettings(Map.empty[String, String]).skipFullImport)
+    // one key is read alone: an env whose other settings would fail
+    // GraftSettings construction (NPE_VERSION=v9 with no NPE_DURATION)
+    // still yields the flag
+    val env = Map("NPE_VERSION" -> "v9", "GRAFT_CENTS_OUT" -> "1")
+    intercept[IllegalArgumentException](GraftSettings(env))
+    assert(GraftSettings.flag(env, "GRAFT_CENTS_OUT"))
+    assert(!GraftSettings.flag(env, "SKIP_FULL_IMPORT"))
   }
 
   test("empty TABLES means every registered table") {

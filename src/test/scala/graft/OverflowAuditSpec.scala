@@ -5,31 +5,23 @@ import graft.operators.OverflowAudit
 
 /** The scaled-integer overflow audit (operators/OverflowAudit.scala): the
   * SURVEY §4 ceilings as a runnable deployment check. Green on the test
-  * data (nothing within 10% of 2⁶³), red on a constructed table that
-  * crosses the line — so a 100 TB deployment DETECTS the "flip the
-  * documented widening switch" moment instead of remembering it.
+  * data, red on a constructed table that crosses the line — so a 100 TB
+  * deployment DETECTS the moment it needs an escape (q72, the cents
+  * forms) instead of remembering it.
   */
 class OverflowAuditSpec extends SparkSpec {
 
   test("audit: every family and grouping-class has ample headroom on the test data") {
     val hs = OverflowAudit.audit(spark, sfDir)
+    // every money sum runs through Sum128, so the only 2⁶³ row left is q68's
+    // long gate; the rest watch the 2^53 output casts
     assert(hs.map(_.family).toSet == Set(
-      "revenue_sum", "revenue_sum:nation_group", "revenue_sum:brand_group",
-      "revenue_sum:shipyear_group", "revenue_sum:suppkey_group",
-      "revenue_sum:custkey_group", "revenue_sum:orderkey_group",
-      "revenue_sum:orderyear_group", "revenue_sum:suppnation_group",
-      "totalprice_sum:priority_group", "acctbal_sum", "qty_sum",
-      "age_sum:eventtype_group", "gate_cross_mult",
+      "gate_cross_mult",
       "cast_double:cents2", "cast_double:value_sums", "cast_double:event_value",
       "cast_double:grouped_revenue", "cast_double:entity_revenue",
       "cast_double:acctbal", "cast_double:qty"))
-    // grouping soundness (ADVICE r14): q40 (o_year only) and q41 (supplier
-    // nation) are NOT refinements of customer nation — each is bounded by
-    // a row measuring its OWN grouping, never by the nation row
     val byFam = hs.map(h => h.family -> h.queries).toMap
-    assert(byFam("revenue_sum:orderyear_group") == Seq("q40"))
-    assert(byFam("revenue_sum:suppnation_group") == Seq("q41"))
-    assert(!byFam("revenue_sum:nation_group").exists(Set("q40", "q41")))
+    assert(byFam("cast_double:grouped_revenue") == Seq("q34", "q40", "q41", "q49", "q76"))
     hs.foreach { h =>
       assert(h.ok, s"family past the 10% alarm line: $h")
       // the documented margin: nothing in the verified range is within
@@ -39,12 +31,6 @@ class OverflowAuditSpec extends SparkSpec {
       assert(h.worst.exists(_ > 0), s"audit computed an empty worst case: $h")
       assert(h.queries.nonEmpty, s"row names no registered queries: $h")
     }
-    // a grouped row bounds BELOW its family's global ceiling (grouping only
-    // splits the sum) — the property that makes the per-class alarm later
-    // (and therefore honest) than the global one
-    val global = hs.find(_.family == "revenue_sum").get.worst.get
-    val nation = hs.find(_.family == "revenue_sum:nation_group").get.worst.get
-    assert(nation <= global, "a per-nation group sum cannot exceed the global sum")
   }
 
   test("groupedSumHeadroom: max per-group sum, not the global sum") {
@@ -53,53 +39,44 @@ class OverflowAuditSpec extends SparkSpec {
     // the GLOBAL sum would read ~2^62; the grouped bound must be the max
     // group, proving it measures the arithmetic a grouped query runs
     val df = (Seq.fill(2)(("hot", 1L << 60)) ++ Seq(("cold", 5L))).toDF("g", "v")
-    val h = OverflowAudit.groupedSumHeadroom("g", df, Seq(col("g")), col("v"), wideSwitchCovers = false)
+    val h = OverflowAudit.groupedSumHeadroom("g", df, Seq(col("g")), col("v"))
     assert(h.worst.contains(BigDecimal(BigInt(1) << 61)), s"wrong grouped worst: $h")
     assert(!h.ok, "a 2^61 per-group sum is past the 10% alarm line")
     // below the line: same shape, small values
     val small = Seq(("a", 10L), ("a", 3L), ("b", 9L)).toDF("g", "v")
-    val hs = OverflowAudit.groupedSumHeadroom("g", small, Seq(col("g")), col("v"), wideSwitchCovers = false)
+    val hs = OverflowAudit.groupedSumHeadroom("g", small, Seq(col("g")), col("v"))
     assert(hs.ok && hs.worst.contains(BigDecimal(13)))
     // fail-closed contract carried over: per-row null terms and empty input
     val withNull = Seq(("a", Some(1L)), ("a", None), ("b", Some(2L)))
       .toDF("g", "v")
-    val hn = OverflowAudit.groupedSumHeadroom("g", withNull, Seq(col("g")), col("v"), wideSwitchCovers = false)
+    val hn = OverflowAudit.groupedSumHeadroom("g", withNull, Seq(col("g")), col("v"))
     assert(!hn.ok && hn.worst.isEmpty, s"per-row null terms must fail closed: $hn")
     val he = OverflowAudit.groupedSumHeadroom("g",
-      Seq.empty[(String, Long)].toDF("g", "v"), Seq(col("g")), col("v"),
-      wideSwitchCovers = false)
+      Seq.empty[(String, Long)].toDF("g", "v"), Seq(col("g")), col("v"))
     assert(he.ok && he.worst.contains(BigDecimal(0)), "zero groups cannot overflow")
   }
 
-  test("gates: wide-sums switch releases covered rows, never the q68 gate") {
-    val covered = OverflowAudit.Headroom("revenue_sum", Some(OverflowAudit.Ceiling),
-      queries = Seq("q13"), wideSwitchCovers = true)
+  test("gates: q68's gate and unmeasurable rows gate in every mode") {
     val gateRow = OverflowAudit.Headroom("gate_cross_mult", Some(OverflowAudit.Ceiling),
-      queries = Seq("q68"), wideSwitchCovers = false)
-    assert(!covered.ok && !gateRow.ok)
-    // narrow mode: everything gates (the status quo ante)
-    assert(covered.gates(wideSumsOn = false) && gateRow.gates(wideSumsOn = false))
-    // wide mode: the swept family is released — its 64-bit ceiling no
-    // longer exists — but q68's long cross-mult gate still trips (its
-    // escape is the registered q72 wide form, not the switch)
-    assert(!covered.gates(wideSumsOn = true))
-    assert(gateRow.gates(wideSumsOn = true))
+      queries = Seq("q68"))
+    assert(!gateRow.ok)
+    // q68's long cross-mult gate trips whatever the cents switch says (its
+    // escape is the registered q72 decimal form)
+    assert(gateRow.gates(centsOutOn = false) && gateRow.gates(centsOutOn = true))
     // only a MEASURED crossing is releasable (ADVICE r14): an UNMEASURABLE
-    // covered row signals the audit itself failed — a data/measurement
-    // anomaly the switch does not remove — so it gates in BOTH modes
-    val unmeasurable = OverflowAudit.Headroom("revenue_sum", None,
-      queries = Seq("q13"), wideSwitchCovers = true)
+    // row signals the audit itself failed — a data/measurement anomaly no
+    // switch removes — so it gates in every mode, even on a covered row
+    val unmeasurable = OverflowAudit.Headroom("cast_double:cents2", None,
+      queries = Seq("q13"), centsSwitchCovers = true)
     assert(!unmeasurable.ok)
-    assert(unmeasurable.gates(wideSumsOn = false))
-    assert(unmeasurable.gates(wideSumsOn = true),
-      "an unmeasurable row must keep gating under wide mode — fail closed")
-    // and the Verify-level gate expression over both states
-    def gateOk(rows: Seq[OverflowAudit.Headroom], wide: Boolean) =
-      rows.forall(h => h.ok || !h.gates(wide))
-    assert(!gateOk(Seq(covered, gateRow), wide = false))
-    assert(!gateOk(Seq(covered), wide = false))
-    assert(gateOk(Seq(covered), wide = true))
-    assert(!gateOk(Seq(covered, gateRow), wide = true))
+    assert(unmeasurable.gates(centsOutOn = false))
+    assert(unmeasurable.gates(centsOutOn = true),
+      "an unmeasurable row must keep gating under the cents switch — fail closed")
+    // and the Verify-level gate expression
+    def gateOk(rows: Seq[OverflowAudit.Headroom], cents: Boolean) =
+      rows.forall(h => h.ok || !h.gates(cents))
+    assert(!gateOk(Seq(gateRow), cents = true))
+    assert(!gateOk(Seq(unmeasurable), cents = true))
   }
 
   test("audit: a constructed near-ceiling table trips the alarm") {
@@ -129,8 +106,7 @@ class OverflowAuditSpec extends SparkSpec {
     // cast-exact. (Cross-engine hash identity is untouched either way —
     // both engines round the same exact integer to the same nearest
     // double — which is why these rows guard FIDELITY, not determinism,
-    // and why their escape is a representation change, not the wide
-    // switch.)
+    // and why their escape is a representation change, not a wider sum.)
     val past = (BigDecimal(2).pow(53) + 1).toLong // odd: between 2^53 and 2^53+2
     val below = (BigDecimal(2).pow(53) - 1).toLong // all ints < 2^53 are exact
     def castPair(c: Long): (Double, Long) = {
@@ -155,20 +131,18 @@ class OverflowAuditSpec extends SparkSpec {
     assert(watch.ok, s"50% of 2^53 must NOT alarm at alarmAt=1.0: $watch")
     val crossed = watch.copy(worst = Some(BigDecimal(2).pow(53) * 1.05))
     assert(!crossed.ok, s"105% of 2^53 must alarm: $crossed")
-    assert(crossed.gates(wideSumsOn = true),
-      "the wide switch must NOT release a cast-fidelity crossing")
     // r17: the integer-cents OUTPUT switch is the escape that does release
     // a cents2 crossing — the members' double cast no longer exists — but
     // only rows whose every member has a registered cents form, and only
-    // MEASURED crossings (same fail-closed rule as the wide switch)
+    // MEASURED crossings (the fail-closed rule)
     val centsCovered = crossed.copy(centsSwitchCovers = true)
-    assert(!centsCovered.gates(wideSumsOn = false, centsOutOn = true),
+    assert(!centsCovered.gates(centsOutOn = true),
       "GRAFT_CENTS_OUT must release a covered cents2 crossing")
-    assert(centsCovered.gates(wideSumsOn = true, centsOutOn = false),
+    assert(centsCovered.gates(centsOutOn = false),
       "without the cents switch the cents2 crossing keeps gating")
-    assert(crossed.gates(wideSumsOn = false, centsOutOn = true),
+    assert(crossed.gates(centsOutOn = true),
       "the cents switch must NOT release rows it does not cover (centsSwitchCovers=false)")
-    assert(centsCovered.copy(worst = None).gates(wideSumsOn = false, centsOutOn = true),
+    assert(centsCovered.copy(worst = None).gates(centsOutOn = true),
       "an unmeasurable row must keep gating under the cents switch — fail closed")
   }
 
@@ -203,32 +177,26 @@ class OverflowAuditSpec extends SparkSpec {
 
   test("auditDf: one row per (family, grouping-class) with verdict and members") {
     val rows = OverflowAudit.auditDf(spark, sfDir).collect()
-    assert(rows.length == 21)
+    assert(rows.length == 8)
     assert(rows.forall(_.getBoolean(3)))
     assert(rows.forall(_.getString(4).nonEmpty), "every row must name its queries")
     val castRows = Set(
       "cast_double:cents2", "cast_double:value_sums", "cast_double:event_value",
       "cast_double:grouped_revenue", "cast_double:entity_revenue",
       "cast_double:acctbal", "cast_double:qty")
-    // rows NOT released by the wide-sums switch: q68's gate (escape = the
-    // registered q72 decimal form) and every 2^53 cast-fidelity row
-    // (escape = the integer-cents forms — widening the SUM buffer cannot
-    // un-round the output cast)
-    assert(rows.filterNot(_.getBoolean(5)).map(_.getString(0)).toSet ==
-      castRows + "gate_cross_mult")
     // rows released by the integer-cents output switch: ALL cast rows
     // (r17/r18) — every member routes to an integer-cents output form
     // under GRAFT_CENTS_OUT (registered q77-q81 or in place) and has a
     // cents oracle (oracleSqlFor), so the switch may release any measured
     // crossing among them
-    assert(rows.filter(_.getBoolean(6)).map(_.getString(0)).toSet == castRows)
+    assert(rows.filter(_.getBoolean(5)).map(_.getString(0)).toSet == castRows)
   }
 
   test("Verify exit-code contract: 1=dumps incomplete, 2=gate tripped, 0=clean") {
     // the distinct-code contract sf10+ automation relies on
     // (tools/check_verify.py `verify_exit=`): a dump failure makes the
     // artifacts worthless and DOMINATES the gate state; a tripped gate over
-    // complete dumps is the recoverable "flip the widening switch" state
+    // complete dumps is the recoverable "take the escape" state
     assert(Verify.exitCode(dumpFailures = 0, gateOk = true) == 0)
     assert(Verify.exitCode(dumpFailures = 0, gateOk = false) == 2)
     assert(Verify.exitCode(dumpFailures = 1, gateOk = true) == 1)

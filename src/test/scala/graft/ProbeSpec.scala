@@ -9,9 +9,9 @@ class ProbeSpec extends SparkSpec {
 
   test("variants parse as query or query@key=value[,key=value]") {
     assert(Probe.parseVariant("q61_part_variety") == Probe.Variant("q61_part_variety", "q61_part_variety", Nil))
-    val v = Probe.parseVariant("q73_pricing_summary_wide@spark.graft.wideSums=true,a.b=x=y")
-    assert(v.query == "q73_pricing_summary_wide")
-    assert(v.delta == Seq("spark.graft.wideSums" -> "true", "a.b" -> "x=y"))
+    val v = Probe.parseVariant("q12_pricing_summary@spark.sql.autoBroadcastJoinThreshold=-1,a.b=x=y")
+    assert(v.query == "q12_pricing_summary")
+    assert(v.delta == Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1", "a.b" -> "x=y"))
     intercept[IllegalArgumentException](Probe.parseVariant("q61_part_variety@novalue"))
   }
 

@@ -290,91 +290,64 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
-  test("engine-level wide-sums switch: swept grouped members ≡ narrow, and the flag is live") {
-    // VERDICT r12/r13 task 1: ONE config flag (spark.graft.wideSums /
-    // GRAFT_WIDE_SUMS) routes every grouped revenue/value-sum family member
-    // through xsum's decimal(38,0) buffer. Below the 64-bit ceiling the
-    // flip must be a pure representation change — same schema, same rows.
-    val swept = Seq(
+  test("money-sum members aggregate through Sum128 by default, with compiled codegen") {
+    // every grouped revenue/value-sum member sums through xsum's exact
+    // Sum128 with no option set — the one money-sum path. Values are
+    // graded against the HUGEINT DuckDB oracles by Verify; this pins that
+    // the exact buffer is what actually runs, and that each member's
+    // generated code compiles (with fallback off a Janino failure throws
+    // instead of silently interpreting the aggregate).
+    val members = Seq(
       "q12_pricing_summary", "q13_region_revenue", "q16_brand_volume",
-      "q17_priority_counts", "q18_nation_rollup", "q29_salted_join",
-      "q32_ship_priority", "q34_nation_trade", "q35_returned_items",
-      "q40_market_share", "q41_product_profit", "q48_revenue_forecast",
-      "q49_promo_share", "q53_small_order_revenue", "q54_large_orders",
-      "q55_disjunctive_revenue", "q56_top_supplier", "q67_excess_shippers",
-      // the age_sum family (r15): q27's interval sums are the engine's
-      // earliest 64-bit crossing (~sf35 on the replication sets) and ride
-      // the same switch
-      "q27_age_metrics")
-    try {
-      // liveness first: the flag must actually reach the aggregate buffer,
-      // otherwise the ≡ comparison below passes vacuously on two narrow runs
-      spark.conf.set("spark.graft.wideSums", "true")
-      assert(SparkEntry.wideSums(spark))
-      // the buffer-width marker is the SUM AGGREGATE's input type — read
-      // structurally off the optimized plan's Aggregate nodes (ADVICE r15:
-      // the earlier "sum(cast(" substring match was one pretty-print paren
-      // away from a false positive — the narrow term prints as
-      // "sum((cast(…" — and breaks across Spark versions); a decimal in
-      // the final PROJECTION (cents2/rdiv's exact-integer HALF_UP of the
-      // already-computed long sum) is NOT an aggregate buffer and does not
-      // register here
-      // r18: the wide buffer is the Sum128 two-long aggregate (it replaced
-      // sum(cast(x as decimal(38,0))) — same exact decimal(38,0) result,
-      // primitive codegen buffer), so its presence IS the liveness marker
-      def hasWideSum(name: String): Boolean = {
-        import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-        import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-        SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan.collect {
-          case a: Aggregate => a.aggregateExpressions.flatMap(_.collect {
-            case ae: AggregateExpression => ae.aggregateFunction
-          }).collect { case s: graft.expressions.Sum128 => s }
-        }.flatten.nonEmpty
+      "q17_priority_counts", "q18_nation_rollup", "q27_age_metrics",
+      "q29_salted_join", "q32_ship_priority", "q34_nation_trade",
+      "q35_returned_items", "q40_market_share", "q41_product_profit",
+      "q48_revenue_forecast", "q49_promo_share", "q53_small_order_revenue",
+      "q54_large_orders", "q55_disjunctive_revenue", "q56_top_supplier",
+      "q67_excess_shippers")
+    // the buffer marker is the SUM AGGREGATE's function, read structurally
+    // off the optimized plans' Aggregate nodes (a decimal in the final
+    // projection — cents2/rdiv's HALF_UP — is not an aggregate buffer).
+    // The plans include every query the build itself executes: q56
+    // aggregates inside an eager localCheckpoint, so its final plan only
+    // reads the checkpointed rows.
+    def hasSum128(name: String): Boolean = {
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+      import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+      import org.apache.spark.sql.execution.QueryExecution
+      import org.apache.spark.sql.util.QueryExecutionListener
+      val built = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          built.synchronized(built += qe.optimizedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
-      assert(hasWideSum("q13_region_revenue"),
-        "wide flag on, but q13's plan has no Sum128 aggregate buffer — the switch is dead")
-      // the flip must be a pure BUFFER change: same exchanges, same joins —
-      // only the agg buffer widens 8→16 bytes (the q72/q73 precedent,
-      // asserted instead of narrated)
-      def shape(name: String): (Int, Int) = {
-        val p = SparkEntry.queries(name)(spark, sfDir).queryExecution
-          .executedPlan.toString
-        ("Exchange".r.findAllIn(p).length, "Join".r.findAllIn(p).length)
+      spark.listenerManager.register(listener)
+      val plans = try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        org.apache.spark.sql.graft.ListenerDrain(spark.sparkContext)
+        built.synchronized(built.toList) :+ df.queryExecution.optimizedPlan
+      } finally spark.listenerManager.unregister(listener)
+      plans.exists(_.collect {
+        case a: Aggregate => a.aggregateExpressions.flatMap(_.collect {
+          case ae: AggregateExpression => ae.aggregateFunction
+        }).collect { case s: graft.expressions.Sum128 => s }
+      }.flatten.nonEmpty)
+    }
+    val prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try members.foreach { n =>
+      assert(hasSum128(n), s"$n: no Sum128 aggregate buffer in the default plan")
+      val rows = withClue(s"$n: ")(SparkEntry.queries(n)(spark, sfDir).collect())
+      if (rows.isEmpty) {
+        // an empty result never runs the aggregate's generated code (q34's
+        // nation-pair filter selects nothing at sf0.001) — re-pin the
+        // member one SF up where it has rows
+        val rows01 = withClue(s"$n (sf0.01): ")(
+          SparkEntry.queries(n)(spark, TestSession.sfDir01).collect())
+        assert(rows01.nonEmpty, s"$n returned no rows at sf0.01 either — the pin never bites")
       }
-      val wideShape = Seq("q13_region_revenue", "q40_market_share").map(shape)
-      val wide = swept.map(n => n -> SparkEntry.queries(n)(spark, sfDir))
-      val wideRows = wide.map { case (n, df) => n -> (df.schema, df.collect().toSet) }.toMap
-
-      // narrow leg pinned via conf=false (overrides any GRAFT_WIDE_SUMS in
-      // the test environment — the spec must not depend on the process env)
-      spark.conf.set("spark.graft.wideSums", "false")
-      assert(!SparkEntry.wideSums(spark))
-      assert(!hasWideSum("q13_region_revenue"),
-        "wide flag off, but q13's plan still aggregates through Sum128 — the narrow fast path is gone")
-      val narrowShape = Seq("q13_region_revenue", "q40_market_share").map(shape)
-      assert(wideShape == narrowShape,
-        s"wide mode changed the plan SHAPE (exchanges/joins), not just the buffer: " +
-          s"wide=$wideShape narrow=$narrowShape")
-      swept.foreach { n =>
-        val narrow = SparkEntry.queries(n)(spark, sfDir)
-        val (ws, wr) = wideRows(n)
-        assert(ws == narrow.schema,
-          s"$n: wide mode changed the output schema (the driver compare is column-name keyed)")
-        val nr = narrow.collect().toSet
-        assert(wr == nr, s"$n: wide != narrow below the 64-bit ceiling")
-        if (nr.isEmpty) {
-          // empty≡empty is vacuous (q34's nation-pair filter selects nothing
-          // at sf0.001) — re-pin the member one SF up where it has rows
-          val dir01 = TestSession.sfDir01
-          spark.conf.set("spark.graft.wideSums", "true")
-          val w01 = SparkEntry.queries(n)(spark, dir01).collect().toSet
-          spark.conf.set("spark.graft.wideSums", "false")
-          val n01 = SparkEntry.queries(n)(spark, dir01).collect().toSet
-          assert(n01.nonEmpty, s"$n returned no rows at sf0.01 either — the ≡ pin never bites")
-          assert(w01 == n01, s"$n: wide != narrow below the 64-bit ceiling (sf0.01)")
-        }
-      }
-    } finally spark.conf.unset("spark.graft.wideSums")
+    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
   }
 
   test("engine-level integer-cents output switch: flipped members ≡ registered escapes") {
@@ -558,12 +531,12 @@ class QueriesSpec extends SparkSpec {
     import spark.implicits._
     val big = (1L to 200L).map(_ => 1L << 60).toDF("term")
     val exact = BigInt(200) * (BigInt(1) << 60)
-    val wide = big.agg(SparkEntry.xsum(col("term"), wide = true).cast("string"))
+    val wide = big.agg(SparkEntry.xsum(col("term")).cast("string"))
       .head().getString(0)
     assert(BigInt(wide) == exact, s"decimal(38,0) sum must be exact: got $wide")
-    // the narrow form silently WRAPS in non-ANSI mode — the failure the
-    // gate exists to catch before it ships
-    val narrow = big.agg(SparkEntry.xsum(col("term"), wide = false)).head().getLong(0)
+    // a 64-bit sum silently WRAPS in non-ANSI mode — the failure xsum
+    // exists to rule out
+    val narrow = big.agg(sum(col("term"))).head().getLong(0)
     assert(BigInt(narrow) != exact, "64-bit sum unexpectedly exact past the ceiling — " +
       "did ANSI mode flip? the gate's premise changed")
   }

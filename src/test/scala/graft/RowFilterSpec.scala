@@ -56,6 +56,14 @@ class RowFilterSpec extends SparkSpec {
         |  {"$and": [{"data.value": {"$gte": 150}}, {"data.event_type": {"$ne": "error"}}]}
         |]}""".stripMargin
     assert(ids(j) == Seq(1L, 2L, 4L, 5L))
+    // empty lists follow the reference evaluator's all()/any(): an empty
+    // $and keeps every row, an empty $or keeps none, and an empty operator
+    // object keeps every row like the empty document
+    assert(ids("""{"$and": []}""") == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(ids("""{"$or": []}""").isEmpty)
+    assert(ids("""{"data.value": {}}""") == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(ids("""{"$or": [{"$and": []}, {"$or": []}]}""") == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(ids("""{"$and": [{"$or": []}, {"data.value": {"$gt": 0}}]}""").isEmpty)
   }
 
   test("empty filter keeps everything; unknown keys throw") {

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** r18: the wide-sum path swapped `sum(cast(x as decimal(38,0)))` for the
-  * two-long Sum128 DeclarativeAggregate — these pin exact equality of the
-  * two forms (values, nulls, empty groups) so the swap can never drift.
+/** r18: the exact-sum path (`SparkEntry.xsum`) swapped
+  * `sum(cast(x as decimal(38,0)))` for the two-long Sum128
+  * DeclarativeAggregate — these pin exact equality of the two forms
+  * (values, nulls, empty groups) so the swap can never drift.
   */
 class Sum128Spec extends SparkSpec {
 

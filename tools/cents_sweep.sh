@@ -7,8 +7,7 @@
 # omitted. Verify writes the switch-aware oracle map (oracleSqlFor), so
 # every routed member compares against the HUGEINT cents oracle matching
 # the form it actually emitted — this sweep proves the whole suite stays
-# hash-exact with the escape flipped, the same standing proof
-# CORRECTNESS_WIDE.json provides for GRAFT_WIDE_SUMS=1.
+# hash-exact with the escape flipped.
 #
 # Usage: tools/cents_sweep.sh [sfDir] [outDir] [artifact]
 set -u

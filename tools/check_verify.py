@@ -4,8 +4,9 @@
 graft.Verify exit-code contract (mirrors Verify.scala's scaladoc):
   0 = dumps complete, overflow gate clear        -> compare normally
   2 = dumps complete, overflow gate TRIPPED      -> compare normally; the
-      data is past a 64-bit family's 10%-of-2^63 alarm (by design at sf10+)
-      and the deployment must flip the widening switch (q72/q73-q76 _wide)
+      data is past an audit row's alarm line (q68's 64-bit gate, or a 2^53
+      output cast) and the deployment must take that row's escape
+      (q72_nation_value_wide, or GRAFT_CENTS_OUT=1)
   1 = one or more dumps FAILED                   -> do NOT trust a compare
 Pass the observed code as verify_exit=<n> and this tool enforces that:
 it refuses to compare after exit 1 and annotates exit 2 as gate-tripped.
@@ -23,7 +24,7 @@ for arg in sys.argv[3:]:
     if key == 'only': only = set(val.split(','))
     if key == 'skip': skip = set(val.split(','))
     if key == 'json_out': json_out = val   # per-query status artifact
-    if key == 'note': note = val           # free-form run label (e.g. wide mode)
+    if key == 'note': note = val           # free-form run label (e.g. cents mode)
     if key == 'verify_exit':
         code = int(val)
         if code == 1:
@@ -31,8 +32,8 @@ for arg in sys.argv[3:]:
                      '(fix the failed dumps, do not grade partial artifacts)')
         elif code == 2:
             print('verify exited 2: overflow gate tripped (dumps valid) — '
-                  'comparing normally; this data needs the widened arithmetic '
-                  'in production (q72/q73-q76 _wide)')
+                  'comparing normally; this data needs the audit row\'s escape '
+                  'in production (q72_nation_value_wide or GRAFT_CENTS_OUT=1)')
         elif code != 0:
             sys.exit(f'verify exited {code}: unknown code — contract is 0/1/2')
 

@@ -9,7 +9,7 @@ set -e
 cd /root/repo
 shopt -s nullglob
 git add -A -- BENCH_r*.json CORRECTNESS_r*.json BENCH_LOCAL.json \
-  CORRECTNESS_WIDE.json LEAKCHECK.json VERDICT.md ADVICE.md BASELINE.json \
+  LEAKCHECK.json VERDICT.md ADVICE.md BASELINE.json \
   BENCH_SF*.json 2>/dev/null || true
 if git diff --cached --quiet; then
   echo "round_close: nothing to commit (tree clean for driver artifacts)"

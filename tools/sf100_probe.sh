@@ -1,8 +1,8 @@
 #!/bin/bash
 # Decade-3 (sf100, ~16 GB) probe. Subset per tools/sf100_notes.json:
 # scan-bound headliners + the dedup third point + trained similarity chain
-# + text kernels + (r12) the widened revenue family next to its narrow
-# forms, 2 passes; the quadratic-by-contract cell-local pair (d11/d13,
+# + text kernels + (r12) the q73-q76 revenue family (now aliases of
+# q12/q16/q48/q49), 2 passes; the quadratic-by-contract cell-local pair (d11/d13,
 # pinned k=16) at 1 pass; then a cache-warm re-run of the 16-17x band
 # (VERDICT r11 task 2: q13/q29/q60/q61 — distinguish rig storage
 # bandwidth from plan scaling, the q12 treatment); merge_raw; the
@@ -48,23 +48,6 @@ SPARK_GRAFT_SF_DIR=/root/repo/testdata/sf100 SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_BENCH_OUT=/tmp/BENCH_SF100_C.json \
   sbt -batch "runMain graft.Bench $QBAND" || exit 1
 grep -E ' (sd[a-z]+|nvme[0-9a-z]+|vd[a-z]+) ' /proc/diskstats > /tmp/diskstats_C1.txt
-
-echo "=== STAGE sf100 q13 wide-vs-narrow (engine-level switch, r14) $(date) ==="
-# the grouped-family widening switch measured on one grouped member at
-# 600M rows: same query, same plan shape, only the agg buffer widens
-# 8->16 bytes (the q72/q73 precedent read 0.7-1.6x) — the price of
-# arithmetic that stays exact past the 64-bit per-group ceiling
-SPARK_GRAFT_SF_DIR=/root/repo/testdata/sf100 SPARK_GRAFT_CPUS=32 \
-  SPARK_DRIVER_MEM=64g SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
-  SPARK_GRAFT_BENCH_PASSES=3 SPARK_GRAFT_BENCH_OUTLIER_SEC=10000 \
-  SPARK_GRAFT_BENCH_OUT=/tmp/BENCH_SF100_Q13N.json \
-  sbt -batch "runMain graft.Bench q13_region_revenue" || exit 1
-GRAFT_WIDE_SUMS=1 \
-  SPARK_GRAFT_SF_DIR=/root/repo/testdata/sf100 SPARK_GRAFT_CPUS=32 \
-  SPARK_DRIVER_MEM=64g SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
-  SPARK_GRAFT_BENCH_PASSES=3 SPARK_GRAFT_BENCH_OUTLIER_SEC=10000 \
-  SPARK_GRAFT_BENCH_OUT=/tmp/BENCH_SF100_Q13W.json \
-  sbt -batch "runMain graft.Bench q13_region_revenue" || exit 1
 
 echo "=== STAGE sf100 1-pass (cell-local quadratic family) $(date) ==="
 SPARK_GRAFT_SF_DIR=/root/repo/testdata/sf100 SPARK_GRAFT_CPUS=32 \

@@ -5,18 +5,16 @@
 # cents (q12's charge class) measured 70% of 2^53 at sf200, so sf300
 # (linear, 1.5x) reads ~105%: the first SF where the new row FIRES.
 # Predicted ladder at sf300 (all linear from measured sf200 readings):
-#   revenue_sum (2^63 family ceiling) ~1020%  -> narrow gates, wide releases
-#   age_sum                            ~860%  -> narrow gates, wide releases
-#   cast_double:cents2                 ~105%  -> gates in BOTH modes (the
-#       wide switch moves the SUM buffer; it cannot un-round an output
-#       cast — the escape is q77's integer-cents representation)
+#   cast_double:cents2                 ~105%  -> gates (the exact Sum128
+#       sum cannot un-round an output cast — the escape is q77's
+#       integer-cents representation)
 #   gate_cross_mult                    ~9.6%  -> still below its 10% line
-#   q12's OWN 6-way grouping           ~92% of 2^63 -> narrow sums still
-#       valid; and its per-group cents ~26% of 2^53 -> its doubles still
-#       exact (the family row is a deliberate ~4x-conservative bound)
+#   q12's per-group cents ~26% of 2^53 -> its doubles still exact (the
+#       family row is a deliberate ~4x-conservative bound)
+# (Every money sum runs through Sum128, so no 2^63 sum row is left.)
 # So the demo claims, all checked below:
-#   wide Verify exit 2 with cast_double:cents2 the ONLY wide-gating row;
-#   q12 AND q77 hash-PASS vs DuckDB HUGEINT in wide mode at 1.8B rows —
+#   Verify exit 2 with cast_double:cents2 gating;
+#   q12 AND q77 hash-PASS vs DuckDB HUGEINT at 1.8B rows —
 #   the boundary is FIDELITY, not determinism (both engines round the
 #   same exact integer to the same nearest double);
 #   q77's BIGINT cents equal DuckDB's exactly (the escape works where the
@@ -37,31 +35,30 @@ runner_exit() {
     | tail -1 | grep -oE '[0-9]+$' || echo 0
 }
 
-rm -rf /dev/shm/spark-local* /tmp/v_sf300_wide
-echo "[sf300] WIDE q12+q77 dump + audit (GRAFT_WIDE_SUMS=1)"
-GRAFT_WIDE_SUMS=1 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=64g SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
-  sbt -batch "runMain graft.Verify $SF_DIR /tmp/v_sf300_wide $QS" \
-  > /tmp/v_sf300_wide.log 2>&1
-WIDE_EXIT=$(runner_exit /tmp/v_sf300_wide.log)
-grep -E 'overflow-audit' /tmp/v_sf300_wide.log | sed 's/^/[sf300-audit] /'
-echo "[sf300] wide verify exit: $WIDE_EXIT (2 expected: cast_double:cents2 fires and the switch cannot release it)"
+rm -rf /dev/shm/spark-local* /tmp/v_sf300
+echo "[sf300] q12+q77 dump + audit"
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=64g SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
+  sbt -batch "runMain graft.Verify $SF_DIR /tmp/v_sf300 $QS" \
+  > /tmp/v_sf300.log 2>&1
+EXIT=$(runner_exit /tmp/v_sf300.log)
+grep -E 'overflow-audit' /tmp/v_sf300.log | sed 's/^/[sf300-audit] /'
+echo "[sf300] verify exit: $EXIT (2 expected: cast_double:cents2 fires)"
 
 echo "[sf300] DuckDB HUGEINT compare (both expected to hash-PASS: fidelity, not determinism)"
-python3 tools/check_verify.py "$SF_DIR" /tmp/v_sf300_wide \
-  only=$QS verify_exit=2 json_out=/tmp/sf300_wide.json \
-  note="wide at sf300: cast_double:cents2 past 100% of 2^53 (gate fires in wide mode); outputs still cross-engine hash-exact" \
+python3 tools/check_verify.py "$SF_DIR" /tmp/v_sf300 \
+  only=$QS verify_exit=2 json_out=/tmp/sf300.json \
+  note="sf300: cast_double:cents2 past 100% of 2^53 (gate fires); outputs still cross-engine hash-exact" \
   | tail -5
 
-python3 - "$WIDE_EXIT" <<'EOF'
+python3 - "$EXIT" <<'EOF'
 import json, re, sys
-wide_exit = sys.argv[1]
-wide = json.load(open('/tmp/sf300_wide.json'))
-audit = [l.strip() for l in open('/tmp/v_sf300_wide.log', errors='replace')
+exit_code = sys.argv[1]
+res = json.load(open('/tmp/sf300.json'))
+audit = [l.strip() for l in open('/tmp/v_sf300.log', errors='replace')
          if 'overflow-audit' in l]
 def row(fam):
-    # a released row prints "[CROSSED (released: wide sums on)]" — match
-    # every state, and an exact family name (the bare "revenue_sum" prefix
-    # must not capture its grouped-class rows)
+    # match every state ("[CROSSED (released: ...)]" included) and an
+    # exact family name
     return next((l.split('overflow-audit', 1)[1].strip() for l in audit
                  if re.search(r'\[(ok|ALARM|CROSSED[^\]]*)\] ' +
                               re.escape(fam) + r': ', l)), '')
@@ -71,27 +68,25 @@ def pct(line, ceil):
 cents_row = row('cast_double:cents2')
 out = {
     'metric': 'cast_fidelity_demo_sf300',
-    'sf_dir': wide['sf'],
+    'sf_dir': res['sf'],
     'finding': ('the 2^53 output-cast boundary fires exactly where predicted '
                 '(family-ceiling cents ~105% of 2^53 at sf300, linear from the '
-                'measured 70% at sf200) and the wide switch cannot release it — '
+                'measured 70% at sf200) and no wider sum can release it — '
                 'while BOTH output forms stay hash-exact vs DuckDB at 1.8B rows: '
                 'the boundary is value fidelity, not cross-engine determinism. '
                 'q12 own groups sit ~4x inside the bound (first real drift '
                 '~sf1150); q77 integer cents are the registered escape.'),
-    'wide_verify_exit': int(wide_exit),
-    'wide_q12': wide['results'].get('q12_pricing_summary'),
-    'wide_q77': wide['results'].get('q77_pricing_summary_cents'),
+    'verify_exit': int(exit_code),
+    'q12': res['results'].get('q12_pricing_summary'),
+    'q77': res['results'].get('q77_pricing_summary_cents'),
     'audit_cast_double_cents2_row': cents_row,
     'audit_cast_double_pct_of_2e53': pct(cents_row, '2^53'),
-    'audit_revenue_sum_row': row('revenue_sum'),
-    'audit_age_sum_row': row('age_sum:eventtype_group'),
     'audit_gate_cross_mult_row': row('gate_cross_mult'),
 }
 st = lambda d: (d or {}).get('status')
 cents_pct = out['audit_cast_double_pct_of_2e53']
-ok = (int(wide_exit) == 2 and
-      st(out['wide_q12']) == 'ok' and st(out['wide_q77']) == 'ok' and
+ok = (int(exit_code) == 2 and
+      st(out['q12']) == 'ok' and st(out['q77']) == 'ok' and
       cents_pct is not None and cents_pct > 100.0)
 out['demo_confirms'] = ok
 print(json.dumps(out, indent=1))
