@@ -112,7 +112,8 @@ final case class GraftSettings(env: Map[String, String]) {
       case JObject(fields) => fields.map { case (k, doc) =>
         k.split('.').last -> RowFilter.compile(JsonMethods.compact(JsonMethods.render(doc)))
       }.toMap
-      case _ => Map.empty
+      case other =>
+        throw new IllegalArgumentException(s"FILTERS_JSON must be an object keyed by table, got $other")
     }
 
   /** The registry subset this deployment syncs (TABLES ∩ registered). */

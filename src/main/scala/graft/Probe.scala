@@ -22,7 +22,8 @@ import graft.plans.BroadcastAudit
   *     — the SemDeDup quantizers in the keep-dominated regime
   *
   * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE_PARTITIONS (the session);
-  *      SPARK_GRAFT_PROBE_PASSES (ab, default 10);
+  *      SPARK_GRAFT_PROBE_PASSES (ab: timed rounds, and the cap on
+  *      untimed warm-up rounds; default 10);
   *      GRAFT_BROADCAST_ALARM_BYTES (broadcast).
   */
 object Probe {
@@ -78,10 +79,10 @@ object Probe {
       }
     }
 
-  /** One untimed warm-up per variant (codegen + JIT), then `passes`
-    * interleaved rounds over the noop sink, alternating the variant order
-    * each round so a slow host window cannot favour one arm. Returns the
-    * result line ([[abLine]]).
+  /** Untimed warm-up rounds ([[warmUp]], at most `passes`), then `passes`
+    * interleaved timed rounds over the noop sink. Every round alternates
+    * the variant order so a slow host window cannot favour one arm.
+    * Returns the result line ([[abLine]]).
     */
   def runAb(spark: SparkSession, sfDir: String, variants: Seq[Variant], passes: Int): String = {
     require(variants.nonEmpty, "ab needs at least one variant")
@@ -92,23 +93,47 @@ object Probe {
     def once(v: Variant): Double = withConf(spark, v.delta) {
       Bench.timedNoop(e => throw e)(SparkEntry.queries(v.query)(spark, sfDir))
     }
-    variants.foreach(once)
-    val samples = variants.map(_ => scala.collection.mutable.ArrayBuffer.empty[Double])
-    for (r <- 0 until passes) {
+    // one round: every variant once, in alternating order; times in variant order
+    def round(r: Int, label: String): Seq[Double] = {
       val order = if (r % 2 == 0) variants.indices else variants.indices.reverse
-      order.foreach { i =>
-        val t = once(variants(i))
-        samples(i) += t
-        System.err.println(f"[probe] pass${r + 1} ${variants(i).spec} $t%.3fs")
-      }
+      val t = order.map { i =>
+        val dt = once(variants(i))
+        System.err.println(f"[probe] $label${r + 1} ${variants(i).spec} $dt%.3fs")
+        i -> dt
+      }.toMap
+      variants.indices.map(t)
     }
-    abLine(sfDir, variants.map(_.spec).zip(samples.map(_.toSeq)))
+    val warmup = warmUp(passes)(round(_, "warmup"))
+    val rounds = (0 until passes).map(round(_, "pass"))
+    abLine(sfDir, variants.map(_.spec).zip(rounds.transpose), warmup)
   }
 
-  /** One JSON line: each variant's quartiles and median, and with two or
-    * more variants the second's round-by-round win count against the first.
+  /** Relative spread under which two consecutive warm-up times count as settled. */
+  val WarmupTolerance = 0.10
+
+  /** The warm-up stop rule: in the last two rounds (each a per-variant time
+    * vector) every variant's times lie within [[WarmupTolerance]] of each
+    * other, relative to the slower. One untimed run is not enough: q12 at
+    * sf1 read 2.1 s on its first pass and 0.6 s on its tenth.
     */
-  def abLine(sfDir: String, samples: Seq[(String, Seq[Double])]): String = {
+  def warmedUp(rounds: Seq[Seq[Double]]): Boolean =
+    rounds.length >= 2 && rounds(rounds.length - 2).zip(rounds.last).forall { case (a, b) =>
+      math.abs(a - b) <= WarmupTolerance * math.max(a, b)
+    }
+
+  /** Run `round(r)` for r = 0, 1, … until [[warmedUp]] holds or `cap`
+    * rounds have run; returns the number of rounds. */
+  def warmUp(cap: Int)(round: Int => Seq[Double]): Int = {
+    var rounds = Vector.empty[Seq[Double]]
+    while (rounds.length < cap && !warmedUp(rounds)) rounds :+= round(rounds.length)
+    rounds.length
+  }
+
+  /** One JSON line: the warm-up round count, each variant's quartiles and
+    * median, and with two or more variants the second's round-by-round win
+    * count against the first.
+    */
+  def abLine(sfDir: String, samples: Seq[(String, Seq[Double])], warmup: Int): String = {
     val vs = samples.map { case (spec, xs) =>
       val q = (p: Double) => Bench.quantile(xs, p)
       s"""{"variant":"${spec.replace("\"", "'")}",""" +
@@ -117,7 +142,7 @@ object Probe {
     val wins =
       if (samples.length < 2) ""
       else s""","second_wins":${samples(1)._2.zip(samples(0)._2).count { case (b, a) => b < a }}"""
-    s"""{"metric":"probe_ab","sf":"$sfDir","passes":${samples.head._2.length},""" +
+    s"""{"metric":"probe_ab","sf":"$sfDir","warmup":$warmup,"passes":${samples.head._2.length},""" +
       s""""variants":${vs.mkString("[", ",", "]")}$wins}"""
   }
 

@@ -836,13 +836,13 @@ object SparkEntry {
     "s11_kmeans_train" -> q { (s, dir) =>
       // exact-integer Lloyd: 3 assign/recompute rounds over 1e-6-scaled
       // integer vectors, k=8 — assignment is a fused long-L2 codegen
-      // kernel against broadcast centroid literals (pure scan), recompute
-      // one k×dim shuffle; all-integer arithmetic makes the trajectory
+      // kernel against centroid literals (pure scan), recompute one k×dim
+      // shuffle (Similarity.lloyd); all-integer arithmetic makes the trajectory
       // hash-exact vs the unrolled DuckDB oracle (the q52 rule applied to
       // the quantizer training s03/s08/s09/d11 previously stubbed with
       // lowest-id stand-ins)
       Similarity.kmeansTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
-        dim = 64, k = 8, iters = 3)
+        k = 8, iters = 3)
     },
     "s12_ann_ivf_trained" -> q { (s, dir) =>
       // the s11-trained quantizer actually CONSUMED: three exact-integer
@@ -855,7 +855,7 @@ object SparkEntry {
       // per round (a bounded model read, never data).
       val emb = Tables.embeddings(s, dir)
       val trained = Similarity.kmeansCentroidVectors(emb, "vec_id", "embedding",
-        dim = 64, k = 8, iters = 3)
+        k = 8, iters = 3)
       Similarity.ivfTopK(emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nCentroids = 8, nProbe = 4, trained = Some(trained))
     },
@@ -887,7 +887,7 @@ object SparkEntry {
       // the SQL re-runs the three Lloyd rounds and the cell-local prune.
       val emb = Tables.embeddings(s, dir)
       val trained = Similarity.kmeansCentroidVectors(emb, "vec_id", "embedding",
-        dim = 64, k = 8, iters = 3)
+        k = 8, iters = 3)
       Dedup.semanticDedup(emb, "vec_id", "embedding", eps = 0.35,
         trained = Some(trained))
     },

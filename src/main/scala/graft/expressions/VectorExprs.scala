@@ -542,8 +542,8 @@ case class HyperplaneSigFL(child: Expression, planes: Array[Array[Float]])
 
 /** Fused `transform(v, x -> cast(round(cast(x as double) * factor) as
   * bigint))` — the 1e-6 scaled-integer conversion the exact-arithmetic
-  * Lloyd loops run over every vector (kmeansTrain once per corpus row,
-  * lloydAssignment once per row PER ROUND). The higher-order `transform`
+  * Lloyd loop (`Similarity.lloyd`, pinned once per corpus row) and s04's
+  * centroids run over every vector. The higher-order `transform`
   * lambda evaluates interpreted per ELEMENT (N×dim tree walks); this
   * kernel is one generated loop per row delegating each element to
   * [[MoneyRound.eval]], whose equality with `round(x·f).cast(long)` is

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.expressions.HashExprs
+import graft.expressions.{HashExprs, VectorExprs}
 import graft.functions.TextFns
 
 /** Document deduplication family for training-data pipelines.
@@ -545,33 +545,27 @@ object Dedup {
     * after [[connectedComponents]] (pick/compute one representative per
     * near-dup cluster) and the k-means/IVF training primitive.
     *
-    * Distributed shape: `posexplode` to (cluster, dim) cells, one shuffle
-    * on the composite key — map-side partial aggregation reduces the
+    * Distributed shape: [[Similarity.cellSums]], the per-(cell, dim)
+    * integer sum every Lloyd round also runs — one shuffle on the
+    * composite key, with map-side partial aggregation reducing the
     * explode's N×dim cells to |clusters|×dim rows before the exchange, so
     * the explode never amplifies shuffle volume.
     *
-    * Components sum as 1e-6-scaled integers (float addition is
-    * order-dependent; the integer sum is exact, so centroids are identical
-    * across engines, partitionings, and retries — same determinism rule as
-    * q35's revenue). The scale is lossless for float32 inputs: a 24-bit
-    * mantissa times 10⁶ stays under 2⁵³, so the double product and its
-    * rounding are exact.
+    * Components sum as 1e-6-scaled integers ([[graft.expressions.ScaleRoundFL]];
+    * float addition is order-dependent, the integer sum is exact, so
+    * centroids are identical across engines, partitionings, and retries —
+    * same determinism rule as q35's revenue). The scale is lossless for
+    * float32 inputs: a 24-bit mantissa times 10⁶ stays under 2⁵³, so the
+    * double product and its rounding are exact.
     *
     * `clusters` must carry (`vec_id`, `cluster_id`); output is one row per
     * (cluster_id, dim) with the member count and the centroid component.
     */
   def clusterCentroids(clusters: DataFrame, embeddings: DataFrame, idCol: String, vecCol: String): DataFrame =
-    clusters.join(embeddings, clusters("vec_id") === embeddings(idCol))
-      .select(col("cluster_id"), posexplode(col(vecCol)).as(Seq("dim", "v")))
-      .groupBy(col("cluster_id"), col("dim"))
-      .agg(
-        count(lit(1)).as("n_members"),
-        // r18: per-element scaling through the guarded fast-round kernel
-        // (bit-identical to round(x*1e6).cast(long) — MoneyRoundSpec)
-        sum(graft.expressions.MoneyRound.scaledLong(
-          col("v").cast("double"), 1000000L)).as("sum6"))
-      .select(col("cluster_id"), col("dim").cast("long").as("dim"), col("n_members"),
-        (col("sum6").cast("double") / (col("n_members") * lit(1000000L))).as("centroid"))
+    Similarity.cellSums(clusters.join(embeddings, clusters("vec_id") === embeddings(idCol)),
+        col("cluster_id"), VectorExprs.scaleRoundFL(col(vecCol), 1000000L))
+      .select(col("cell").as("cluster_id"), col("dim").cast("long").as("dim"), col("n").as("n_members"),
+        (col("sum6").cast("double") / (col("n") * lit(1000000L))).as("centroid"))
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space with a coarse
@@ -731,7 +725,8 @@ object Dedup {
     * at the measured pair rate (see `Probe regime`; all
     * readings in BENCH_SF100.json `d15_lloyd_quantizer_r15`).
     *
-    * Mechanics, all driver-bounded and oracle-mirrorable:
+    * Mechanics, all driver-bounded and oracle-mirrorable — the training
+    * is [[Similarity.lloyd]], the one Lloyd loop s11 also runs:
     *  - Lloyd state lives in 1e-6-scaled INTEGER centroids (s11): the
     *    per-round update is Σx6 div n with truncating division — exact on
     *    both engines — and only the derived float matrix (c6/1e6 per
@@ -744,8 +739,8 @@ object Dedup {
     *  - Per-round driver traffic is the (cell, dim) aggregate — k·dim
     *    longs, a bounded model read of the same envelope as the s08/s09
     *    codebooks (sf100: 16e3×64 ≈ 1M values).
-    *  - Empty cells keep their previous integer centroid (s11's coalesce),
-    *    so the trajectory is total and deterministic.
+    *  - Empty cells keep their previous integer centroid (as in s11), so
+    *    the trajectory is total and deterministic.
     */
   def semanticDedupLloyd(
       corpus: DataFrame,
@@ -780,7 +775,9 @@ object Dedup {
   }
 
   /** [[semanticDedupLloyd]]'s trained quantizer stage alone — see
-    * [[scaledAssignment]] for why the probes read this directly. */
+    * [[scaledAssignment]] for why the probes read this directly:
+    * `lloydRounds` rounds of [[Similarity.lloyd]] with the two-level
+    * assignment over the float image, then the final two-level pick. */
   private[graft] def lloydAssignment(
       corpus: DataFrame,
       idCol: String,
@@ -788,65 +785,27 @@ object Dedup {
       rowsPerCell: Int = 125,
       minCells: Int = 16,
       lloydRounds: Int = 1): DataFrame = {
-    import graft.expressions.VectorExprs
-    require(lloydRounds >= 1)
     // one corpus scan pinned for: count, init read, every round's
     // assignment+update pass, and the final assignment (the d11/s09 rule)
-    val base = corpus
-      .select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
-      .localCheckpoint(true)
-    val n = base.count()
+    val pts = Similarity.scaledPoints(corpus, idCol, vecCol)
+    val n = pts.count()
     val k = math.max(minCells.toLong, n / rowsPerCell).toInt
-    // r19: fused array kernel, not the per-element interpreted transform
-    // lambda — this expression runs once per corpus row PER LLOYD ROUND
-    // (element-identical by the ScaleRoundFL/MoneyRound contract)
-    val x6 = VectorExprs.scaleRoundFL(col("v"), 1000000L)
     // init = STRIDED by id (vec_id ≡ 0 mod ⌊N/k⌋, 0-based rank by id =
-    // cid; bounded model read): d14's lowest-id stand-ins span only the
-    // id-prefix of the corpus, and on replica-dense data that prefix
-    // covers a small fraction of the direction space — measured at sf100,
-    // lowest-id init leaves ONE magnet cell holding 61% of all vectors
-    // (max cell 1.23M of 2M, Σ|cell|² 1.55e12) that a Lloyd round cannot
-    // dissolve (the mean of 61% of the corpus IS the global mean, still a
-    // magnet). A k-th-id stride samples the whole id range — coverage is
-    // a QUALITY heuristic (assumes ids spread across the corpus; with
-    // pathological id clustering it degrades to d14's prefix, never
-    // breaks correctness) — and is exactly mirrorable (id filter + rank).
-    val stride = math.max(1L, n / k)
-    val init = base.select(col("vec_id"), col("v"), x6.as("v6"))
-      .where(col("vec_id") % lit(stride) === 0L)
-      .orderBy(col("vec_id").asc)
-      .limit(k)
-      .collect()
-      .sortBy(_.getLong(0))
-    var c6: Array[Array[Long]] = init.map(_.getSeq[Long](2).toArray)
-    // round 1 assigns against the RAW stand-in floats (exactly d14's
-    // matrix); every later matrix is the float32 image of the integer state
-    var matrix: Array[Array[Float]] = init.map(_.getSeq[Float](1).toArray)
-    val kEff = matrix.length // corpus smaller than k: windows clamp (d14)
-
-    for (_ <- 1 to lloydRounds) {
-      val upd = Similarity.twoLevelAssign(base, k, matrix)
-        .select(col("cell"), posexplode(x6).as(Seq("dim", "x6")))
-        .groupBy(col("cell"), col("dim"))
-        .agg(sum(col("x6")).as("sum6"), count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
-        .toMap
-      // Σx6 / n with JVM long division — truncation toward zero, the same
-      // rule as DuckDB's `//` (s11's proven pairing); empty cells coalesce
-      // to the previous integer centroid
-      c6 = Array.tabulate(kEff) { ci =>
-        Array.tabulate(c6(ci).length) { d =>
-          upd.get((ci.toLong, d)) match {
-            case Some((s, cnt)) => s / cnt
-            case None => c6(ci)(d)
-          }
-        }
-      }
-      matrix = c6.map(_.map(l => (l.toDouble / 1e6).toFloat))
-    }
-    Similarity.twoLevelAssign(base, k, matrix)
+    // cid): d14's lowest-id stand-ins span only the id-prefix of the
+    // corpus, and on replica-dense data that prefix covers a small
+    // fraction of the direction space — measured at sf100, lowest-id init
+    // leaves ONE magnet cell holding 61% of all vectors (max cell 1.23M of
+    // 2M, Σ|cell|² 1.55e12) that a Lloyd round cannot dissolve (the mean
+    // of 61% of the corpus IS the global mean, still a magnet). A k-th-id
+    // stride samples the whole id range — coverage is a QUALITY heuristic
+    // (assumes ids spread across the corpus; with pathological id
+    // clustering it degrades to d14's prefix, never breaks correctness) —
+    // and is exactly mirrorable (id filter + rank). Round 1 assigns
+    // against the raw init floats (exactly d14's matrix); a corpus smaller
+    // than k trains fewer centroids and the windows clamp (d14).
+    val fit = Similarity.lloyd(pts, k, math.max(1L, n / k), lloydRounds)(
+      (_, floats) => Similarity.twoLevelAssign(pts, k, floats))
+    Similarity.twoLevelAssign(pts.drop("v6"), k, fit.image)
   }
 
   /** The SemDeDup prune over a precomputed (vec_id, v, cell) assignment:

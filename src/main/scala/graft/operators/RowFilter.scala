@@ -88,7 +88,9 @@ object RowFilter {
 
   private def toLiteral(v: JValue): Any = v match {
     case JString(s)  => s
-    case JInt(i)     => i.toLong
+    case JInt(i) if i.isValidLong => i.toLong
+    case JInt(i) =>
+      throw new IllegalArgumentException(s"Integer literal $i is outside the 64-bit range")
     case JLong(l)    => l
     case JDouble(d)  => d
     case JDecimal(d) => d.toDouble

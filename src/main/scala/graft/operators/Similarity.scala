@@ -94,7 +94,7 @@ object Similarity {
     }: _*))), 1, nProbe).getField("cid")
 
   /** Two-level cell assignment (see [[graft.operators.Dedup.semanticDedupScaled]]):
-    * (vec_id, v) → (vec_id, v, cell). Level 1 argmaxes over the group
+    * adds `cell` to `vecs` (vec_id, v, …). Level 1 argmaxes over the group
     * leaders (cells at cid ≡ 0 mod gs — one strided pass), level 2 over
     * the chosen group's contiguous cells [leader, leader+gs) ∩ [0, k).
     * Both run in the row's own projection: no joins, no aggregates, no
@@ -109,7 +109,7 @@ object Similarity {
         col("v"), lit(0L), lit(k.toLong), gs, matrix))
       .withColumn("cell", VectorExprs.argmaxCosStride(
         col("v"), col("lr"), least(col("lr") + lit(gs.toLong), lit(k.toLong)), 1, matrix))
-      .select(col("vec_id"), col("v"), col("cell"))
+      .drop("lr")
   }
 
   /** The deterministic ±1 hyperplanes behind [[hyperplaneSig]] — public so
@@ -426,95 +426,105 @@ object Similarity {
   }
 
   /** Exact-integer Lloyd k-means (the trained replacement for the
-    * lowest-id codebook/centroid stand-ins in s03/s08/s09/d11): `iters`
-    * assign-recompute rounds over 1e-6-scaled integer vectors. Because
-    * every operation is integer (scaled components, long squared-L2,
-    * long sums, truncating division), the trajectory is bit-exact across
-    * engines, partitionings and retries — an unrolled SQL oracle
-    * hash-matches the final centroids, the q52 PageRank rule applied to
-    * the one "model fit" a pipeline otherwise can't oracle.
-    *
-    * Distributed shape (the MLlib broadcast pattern): per iteration the
-    * assignment is a PURE SCAN — a fused codegen long-L2 kernel
-    * ([[graft.expressions.VectorExprs.l2LL]]) against k broadcast
-    * centroid literals, argmin via struct `array_min` (ties to the lower
-    * centroid id) — and the recompute is ONE shuffle whose map-side
-    * partials reduce to k×dim groups. Between iterations only the k×dim
-    * centroid ints visit the driver (a bounded model read, never data).
-    * Init = the k lowest-id vectors (the s03/s08 convention). Training at
-    * 100 TB runs this on a sample; the scaled ints come from one linear
-    * `transform` materialized once up front (`localCheckpoint`), the only
-    * non-codegen step.
-    *
-    * Output: one row per (cluster_id, dim) with the final scaled-integer
-    * centroid component `c6` and the final assignment's `n_members`
-    * (empty clusters keep their previous centroid, n_members = 0).
+    * lowest-id stand-ins in s03/s08/s09/d11): `iters` rounds of [[lloyd]]
+    * from the min(k, N) lowest ids, assigning by argmin of the exact long
+    * squared-L2 ([[graft.expressions.VectorExprs.l2LL]]), ties to the
+    * lower centroid id. All-integer, so an unrolled SQL oracle hash-matches
+    * the result (the q52 rule applied to a model fit). Output, built on the
+    * driver: one row per (cluster_id, dim) with the final centroid
+    * component `c6` and the last round's `n_members`.
     */
   def kmeansTrain(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      dim: Int,
       k: Int = 8,
       iters: Int = 3): DataFrame = {
-    require(k > 0 && iters >= 1)
-    // r19: the scaled-integer conversion through the fused array kernel —
-    // the transform(...) higher-order lambda evaluated interpreted per
-    // ELEMENT (N×dim tree walks into this checkpoint); element-identical
-    // by the ScaleRoundFL/MoneyRound contract
-    val v6 = corpus.select(col(idCol).cast("long").as("vec_id"),
-        VectorExprs.scaleRoundFL(col(vecCol), 1000000L).as("v6"))
-      .localCheckpoint(true)
-    var cents: Array[Seq[Long]] = v6.orderBy(col("vec_id").asc).limit(k)
-      .collect().map(_.getSeq[Long](1).toSeq)
-    def recomputed(): DataFrame = {
-      val scores = array(cents.zipWithIndex.map { case (c6, ci) =>
-        struct(VectorExprs.l2LL(col("v6"), typedlit(c6)).as("d2"), lit(ci.toLong).as("ci"))
-      }: _*)
-      v6.select(array_min(scores).getField("ci").as("ci"), posexplode(col("v6")).as(Seq("dim", "x6")))
-        .groupBy(col("ci"), col("dim").cast("long").as("dim"))
-        .agg(sum(col("x6")).as("sum6"), count(lit(1)).as("n"))
-    }
-    for (_ <- 1 until iters) {
-      val upd = recomputed().select(col("ci"), col("dim"), expr("sum6 div n").as("c6")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      cents = Array.tabulate(k)(ci =>
-        Seq.tabulate(dim)(d => upd.getOrElse((ci.toLong, d.toLong), cents(ci)(d))))
-    }
-    // final round stays distributed: the (k×dim)-row aggregate IS the
-    // output; empty clusters coalesce to the previous centroids
+    val fit = kmeansFit(corpus, idCol, vecCol, k, iters)
     val session = corpus.sparkSession
     import session.implicits._
-    val prev = cents.zipWithIndex.flatMap { case (c6, ci) =>
-      c6.zipWithIndex.map { case (v, d) => (ci.toLong, d.toLong, v) }
-    }.toSeq.toDF("cluster_id", "dim", "prev_c6")
-    val comp = recomputed()
-      .select(col("ci").as("cluster_id"), col("dim"), expr("sum6 div n").as("new_c6"), col("n"))
-    // both sides are k×dim rows — no hint needed (build-left is unsupported
-    // for left-outer anyway)
-    prev.join(comp, Seq("cluster_id", "dim"), "left_outer")
-      .select(col("cluster_id"), col("dim"),
-        coalesce(col("new_c6"), col("prev_c6")).as("c6"),
-        coalesce(col("n"), lit(0L)).as("n_members"))
+    (for {
+      (c, ci) <- fit.c6.toSeq.zipWithIndex
+      (v, d) <- c.toSeq.zipWithIndex
+    } yield (ci.toLong, d.toLong, v, fit.n(ci)(d))).toDF("cluster_id", "dim", "c6", "n_members")
   }
 
-  /** [[kmeansTrain]] reduced to a driver-side model handle: the final
-    * centroids as float vectors, consumable by [[ivfTopK]] /
+  /** [[kmeansTrain]]'s fit as a driver-side model handle: the float32
+    * image of the final centroids, consumable by [[ivfTopK]] /
     * [[graft.operators.Dedup.semanticDedup]] in place of their lowest-id
-    * stand-ins (k×dim values — a bounded model read, never data).
+    * stand-ins (min(k, N)×dim values — a bounded model read, never data).
     */
   def kmeansCentroidVectors(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      dim: Int,
       k: Int = 8,
-      iters: Int = 3): Seq[Seq[Float]] = {
-    val cells = kmeansTrain(corpus, idCol, vecCol, dim, k, iters)
-      .select(col("cluster_id"), col("dim"), col("c6")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    Seq.tabulate(k)(ci =>
-      Seq.tabulate(dim)(d => (cells((ci.toLong, d.toLong)).toDouble / 1e6).toFloat))
+      iters: Int = 3): Seq[Seq[Float]] =
+    kmeansFit(corpus, idCol, vecCol, k, iters).image.map(_.toSeq).toSeq
+
+  private def kmeansFit(corpus: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int): LloydFit = {
+    val pts = scaledPoints(corpus, idCol, vecCol)
+    lloyd(pts, k, 1L, iters) { (c6, _) =>
+      pts.withColumn("cell", array_min(array(c6.zipWithIndex.map { case (c, ci) =>
+        struct(VectorExprs.l2LL(col("v6"), typedlit[Seq[Long]](c.toSeq)).as("d2"), lit(ci.toLong).as("ci"))
+      }: _*)).getField("ci"))
+    }
+  }
+
+  /** [[lloyd]]'s result: the 1e-6-scaled integer centroids and the last
+    * round's member count per (cell, dim); `image` is their float32 form
+    * (DuckDB: CAST(c6 / 1e6 AS REAL)). */
+  private[graft] final case class LloydFit(c6: Array[Array[Long]], n: Array[Array[Long]]) {
+    def image: Array[Array[Float]] = c6.map(_.map(l => (l.toDouble / 1e6).toFloat))
+  }
+
+  /** (vec_id, v) pinned once for the init read and every [[lloyd]] round
+    * (the d11/s09 rule), plus v6 = the 1e-6-scaled integers, derived per
+    * read: pinning v6 too triples the checkpoint's bytes per row. */
+  private[graft] def scaledPoints(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
+      .localCheckpoint(true)
+      .withColumn("v6", VectorExprs.scaleRoundFL(col("v"), 1000000L))
+
+  /** The per-(cell, dim) integer vector sum (cell, dim, sum6, n) behind
+    * every exact centroid (s04, each [[lloyd]] round): one shuffle on the
+    * composite key, whose map-side partials reduce the N×dim exploded
+    * pairs to |cells|×dim rows. Exact long sums: identical across engines,
+    * partitionings and retries (q35's rule).
+    */
+  private[graft] def cellSums(df: DataFrame, cell: Column, x6: Column): DataFrame =
+    df.select(cell.as("cell"), posexplode(x6).as(Seq("dim", "x6")))
+      .groupBy(col("cell"), col("dim"))
+      .agg(sum(col("x6")).as("sum6"), count(lit(1)).as("n"))
+
+  /** THE exact-integer Lloyd loop: s11 (and so s12/d13) and d15 train
+    * here and differ only in `assign` and `stride`. Init: the k lowest ids
+    * with vec_id ≡ 0 mod `stride` — min(k, N) centroids. Each round
+    * `assign(c6, floats)` adds a long `cell` to `pts` ([[scaledPoints]]);
+    * `floats` is the raw init in round 1, else the image of `c6`. The
+    * [[cellSums]] (k×dim longs) come to the driver, and the update is
+    * Σx6 div n truncating toward zero like DuckDB's `//`; an empty cell
+    * keeps its previous centroid.
+    */
+  private[graft] def lloyd(pts: DataFrame, k: Int, stride: Long, rounds: Int)(
+      assign: (Array[Array[Long]], Array[Array[Float]]) => DataFrame): LloydFit = {
+    require(k > 0 && stride > 0 && rounds >= 1)
+    val init = pts.where(col("vec_id") % lit(stride) === 0L)
+      .orderBy(col("vec_id").asc).limit(k).collect()
+    var fit = LloydFit(init.map(_.getSeq[Long](2).toArray), Array.empty)
+    var floats = init.map(_.getSeq[Float](1).toArray)
+    for (_ <- 1 to rounds if init.nonEmpty) {
+      val sums = cellSums(assign(fit.c6, floats), col("cell"), col("v6")).collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+      def cells(f: (Long, Option[(Long, Long)]) => Long): Array[Array[Long]] =
+        fit.c6.zipWithIndex.map { case (c, ci) =>
+          c.zipWithIndex.map { case (prev, d) => f(prev, sums.get((ci.toLong, d))) }
+        }
+      fit = LloydFit(cells((prev, s) => s.fold(prev) { case (x6, n) => x6 / n }),
+        cells((_, s) => s.fold(0L)(_._2)))
+      floats = fit.image
+    }
+    fit
   }
 
   /** IVF-style ANN: a coarse quantizer of `nCentroids` centroid vectors

@@ -110,6 +110,18 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(hits.toDouble / top5.size > 0.3, s"recall $hits of ${top5.size}")
   }
 
+  test("Lloyd trainers on a corpus smaller than k train min(k, N) centroids") {
+    val tiny = Tables.embeddings(spark, sfDir).where(col("vec_id") < 5)
+    val grid = Similarity.kmeansTrain(tiny, "vec_id", "embedding", k = 8, iters = 3)
+    assert(grid.count() == 5L * 64)
+    assert(grid.select("cluster_id").distinct().as[Long].collect().sorted.toSeq == (0L until 5L))
+    assert(Similarity.kmeansCentroidVectors(tiny, "vec_id", "embedding", k = 8, iters = 3).length == 5)
+    val cells = Dedup.lloydAssignment(tiny, "vec_id", "embedding")
+      .select(col("vec_id"), col("cell")).as[(Long, Long)].collect()
+    assert(cells.map(_._1).sorted.toSeq == (0L until 5L))
+    assert(cells.forall { case (_, c) => c >= 0 && c < 5 })
+  }
+
   test("connectedComponents: chains collapse to min id, singletons keep their own") {
     // 1-2, 2-3, 3-4 chain (diameter 3 — needs >1 iteration); 10-11 pair;
     // nodes only ever seen on the right side must still get labels

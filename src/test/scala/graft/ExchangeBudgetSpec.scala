@@ -114,7 +114,10 @@ class ExchangeBudgetSpec extends SparkSpec {
     "s01_ann_brute" -> 1,
     "s02_ann_lsh" -> 1, "s03_ann_ivf" -> 1, "s05_range_search" -> 0,
     "s06_quantize" -> 2, "s07_mmr_diversify" -> 4, "s08_pq_encode" -> 0,
-    "s09_adc_search" -> 1, "s10_ivfpq" -> 1, "s11_kmeans_train" -> 1,
+    // s11: 1 → 0 — the trained (cluster, dim) grid is built on the driver
+    // from the Lloyd loop's final state; every round's shuffle runs in its
+    // own collect job, outside the returned plan
+    "s09_adc_search" -> 1, "s10_ivfpq" -> 1, "s11_kmeans_train" -> 0,
     "s12_ann_ivf_trained" -> 1, "m01_multimodal" -> 1, "m02_frame_sample" -> 1,
     "m03_resize_plan" -> 0, "m06_frame_phash" -> 0, "m07_frame_neardup" -> 1,
     "t01_langid" -> 0, "t02_quality" -> 0, "t03_tokens" -> 0,

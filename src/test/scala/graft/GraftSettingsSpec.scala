@@ -97,6 +97,8 @@ class GraftSettingsSpec extends SparkSpec {
     val kept = ev.where(filters("events")).select(col("event_type")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(kept == Set("click", "view"))
+    // a document that is not an object keyed by table must not sync unfiltered
+    intercept[IllegalArgumentException](s.rowFilters("""[{"data.id": 1}]"""))
   }
 
   test("syncConfigured honors the TABLES subset and the configured filter") {

@@ -38,6 +38,7 @@ class ProbeSpec extends SparkSpec {
     val j = new ObjectMapper().readTree(Probe.runAb(spark, sfDir, variants, passes = 2))
     assert(j.get("metric").asText == "probe_ab")
     assert(j.get("passes").asInt == 2)
+    assert(j.get("warmup").asInt == 2)
     val vs = j.get("variants")
     assert(vs.size == 2 && vs.get(1).get("variant").asText == variants(1).spec)
     for (i <- 0 until 2) {
@@ -46,7 +47,21 @@ class ProbeSpec extends SparkSpec {
     }
     val wins = j.get("second_wins").asInt
     assert(wins >= 0 && wins <= 2)
-    assert(!new ObjectMapper().readTree(Probe.abLine(sfDir, Seq("a" -> Seq(1.0)))).has("second_wins"))
+    assert(!new ObjectMapper().readTree(Probe.abLine(sfDir, Seq("a" -> Seq(1.0)), 1)).has("second_wins"))
+  }
+
+  test("warm-up stops once every variant's last two times agree within 10%, or at the cap") {
+    assert(!Probe.warmedUp(Nil))
+    assert(!Probe.warmedUp(Seq(Seq(1.0))))
+    assert(Probe.warmedUp(Seq(Seq(2.1, 1.0), Seq(0.7, 1.05), Seq(0.65, 0.96))))
+    assert(!Probe.warmedUp(Seq(Seq(0.7, 1.0), Seq(0.6, 1.0)))) // 14% apart
+    assert(Probe.warmedUp(Seq(Seq(1.0), Seq(0.9))))            // exactly 10%
+    // synthetic per-round time vectors: the JIT-settling curve q12 showed at sf1
+    val settling = Seq(Seq(2.1, 1.9), Seq(1.2, 1.1), Seq(0.8, 0.7), Seq(0.62, 0.66), Seq(0.6, 0.64))
+    assert(Probe.warmUp(10)(settling) == 5)
+    assert(Probe.warmUp(3)(settling) == 3)
+    assert(Probe.warmUp(10)(_ => Seq(1.0)) == 2)
+    assert(Probe.warmUp(1)(_ => Seq(1.0)) == 1)
   }
 
   test("quantile interpolates like the median it replaced") {

@@ -166,6 +166,35 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("s11 Lloyd k-means: every (cluster, dim) row matches a driver-side mirror of the rounds") {
+    val out = SparkEntry.queries("s11_kmeans_train")(spark, sfDir)
+      .select(col("cluster_id"), col("dim"), col("c6"), col("n_members")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
+    // 1e-6-scaled integers (Spark SQL round = HALF_UP on doubles), in id order
+    val pts = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id").cast("long"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
+      .map { case (_, v) => v.map(x =>
+        BigDecimal(x.toDouble * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong) }
+    val (k, dim) = (8, 64)
+    assert(pts.length >= k && pts.forall(_.length == dim))
+    def l2(a: Array[Long], b: Array[Long]): Long =
+      a.indices.map { i => val d = a(i) - b(i); d * d }.sum
+    // init = the k lowest ids; argmin long L2 with ties to the lower id;
+    // truncating updates, an empty cluster keeps its previous centroid
+    var cent = pts.take(k)
+    var members = Map.empty[Int, Array[Array[Long]]]
+    for (_ <- 1 to 3) {
+      members = pts.groupBy(p => cent.indices.minBy(ci => (l2(p, cent(ci)), ci)))
+      cent = Array.tabulate(k)(ci => members.get(ci).fold(cent(ci)) { ms =>
+        ms.reduce((a, b) => a.zip(b).map { case (x, y) => x + y }).map(_ / ms.length)
+      })
+    }
+    val expected = for (ci <- 0 until k; d <- 0 until dim)
+      yield (ci.toLong, d.toLong, cent(ci)(d), members.get(ci).fold(0L)(_.length.toLong))
+    assert(out == expected)
+  }
+
   test("d15 Lloyd dedup: trained assignment matches a driver-side mirror of the rounds") {
     val out = SparkEntry.queries("d15_semantic_dedup_lloyd")(spark, sfDir)
       .select(col("vec_id"), col("cell")).collect()

@@ -129,7 +129,7 @@ class RecallSpec extends SparkSpec {
       df.select(col("q_id").cast("long"), col("neighbor_id").cast("long"))
         .as[(Long, Long)].collect().toSet
     val truth = pairs(Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5))
-    val trained = Similarity.kmeansCentroidVectors(emb, "vec_id", "embedding", dim = 64, k = 16, iters = 3)
+    val trained = Similarity.kmeansCentroidVectors(emb, "vec_id", "embedding", k = 16, iters = 3)
     assert(trained.size == 16 && trained.forall(_.size == 64))
     val ivfTrained = pairs(Similarity.ivfTopK(emb, queries, "vec_id", "embedding", k = 5,
       trained = Some(trained)))

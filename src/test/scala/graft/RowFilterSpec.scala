@@ -70,6 +70,12 @@ class RowFilterSpec extends SparkSpec {
     assert(ids("""{}""") == Seq(1L, 2L, 3L, 4L, 5L))
     intercept[IllegalArgumentException](RowFilter.compile("""{"bogus": 1}"""))
     intercept[IllegalArgumentException](RowFilter.compile("""{"data.value": {"$bogus": 1}}"""))
+    // integers past the 64-bit range are rejected, never wrapped onto a real id
+    intercept[IllegalArgumentException](
+      RowFilter.compile("""{"data.id": {"$eq": 18446744073709551617}}"""))
+    intercept[IllegalArgumentException](
+      RowFilter.compile("""{"data.id": {"$in": [18446744073709551616]}}"""))
+    assert(ids("""{"data.id": {"$eq": 9223372036854775807}}""").isEmpty)
   }
 
   test("filter example from the reference ships verbatim semantics") {
