@@ -113,6 +113,23 @@ object Bench {
     else s"""$head,"qmed_overflow":"$artifact"}"""
   }
 
+  /** The queries a run times, in `defined` order: all of them, or those
+    * named in `filter` (comma-separated). A listed name that is not in
+    * `defined` throws `IllegalArgumentException` naming every such name: a
+    * run that quietly timed fewer queries than it was asked for would read
+    * as a complete one.
+    */
+  def select(defined: Seq[String], filter: Option[String]): Seq[String] = filter match {
+    case None => defined
+    case Some(list) =>
+      val asked = list.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = asked.filterNot(defined.contains)
+      require(asked.nonEmpty, s"query filter '$list' names no query")
+      require(unknown.isEmpty,
+        s"query filter names queries outside Bench.headline: ${unknown.mkString(", ")}")
+      defined.filter(asked.contains)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.defaultCpus
@@ -128,10 +145,7 @@ object Bench {
     }
     // optional first arg: comma-separated query names — isolated runs for
     // variance triage (the driver always runs the full headline list)
-    val names0 = headline.filter(qs.contains)
-    val names = if (args.nonEmpty) names0.filter(args(0).split(',').toSet) else names0
-    require(names.nonEmpty,
-      s"query filter '${args.mkString(",")}' matches no headline query — check spelling / headline list")
+    val names = select(headline.filter(qs.contains), args.headOption)
     // untimed warmup at the smallest SF: pays Janino codegen + C2 JIT for
     // every query's generated classes outside the measured window (the
     // plans and generated code are data-size independent)

@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetTables
 
 /** Typed loaders for the driver-generated testdata tables.
   *
   * The reference engine's scan layer (neynar_parquet_importer/s3.py — chunked
   * parallel S3 download + pyarrow row-group iteration) is re-expressed as
-  * Spark's distributed parquet scan: on a real cluster `spark.read.parquet`
-  * already does parallel ranged reads from object storage, with predicate
-  * pushdown and column pruning that the reference lacks entirely.
+  * Spark's distributed parquet scan: on a real cluster it already does
+  * parallel ranged reads from object storage, with predicate pushdown and
+  * column pruning that the reference lacks entirely. Each load opens its
+  * table through [[graft.sources.ParquetTables.open]], which takes the
+  * schema from one driver-side footer read, so building a query launches no
+  * schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -23,9 +27,10 @@ object Tables {
       // epoch-nanos long). Newer generations write TIMESTAMP(MICROS), which
       // reads natively as TIMESTAMP_NTZ. Set lazily so callers with a
       // driver-owned session still work; `events` below normalizes both.
+      // Set before the open: the footer's schema is converted under it.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetTables.open(spark, s"$dir/$name.parquet")
   }
 
   /** events with `ts_us` (epoch microseconds) added — the cross-engine-safe

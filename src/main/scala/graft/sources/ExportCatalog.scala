@@ -40,8 +40,8 @@ final case class LoadPlan(full: ExportFile, incrementals: Seq[ExportFile]) {
   * Spark-first, discovery is a Hadoop `FileSystem` listing — identical code
   * path for local disk, HDFS, or s3a:// — and the "plan" is computed once on
   * the driver from file *names only* (no data read), then handed to ONE
-  * `spark.read.parquet(paths:_*)` so the cluster never opens a file outside
-  * the requested window. That listing-then-prune is the file-level analog of
+  * parquet scan over all of them ([[ParquetTables.open]]) so the cluster
+  * never opens a file outside the requested window. That listing-then-prune is the file-level analog of
   * partition pruning and is what keeps a 100 TB export directory cheap: the
   * driver touches metadata, executors touch only selected windows.
   */
@@ -139,7 +139,8 @@ object ExportCatalog {
   /** Load a backfill window: one scan over the selected files with the
     * `startTs <= tsCol <= endTs` row filter (the reference's backfill
     * window guard) pushed into the scan — files bound the read via their
-    * window names, the predicate bounds the rows.
+    * window names, the predicate bounds the rows. The schema is the first
+    * selected file's, read from its footer on the driver.
     */
   def loadBackfill(
       spark: SparkSession,
@@ -149,14 +150,17 @@ object ExportCatalog {
       endTs: Long): DataFrame = {
     require(files.nonEmpty, "backfill window selected no files")
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(files.map(_.path): _*)
+    ParquetTables.open(spark, files.map(_.path): _*)
       .where(col(tsCol) >= startTs && col(tsCol) <= endTs)
   }
 
   /** Materialize the current state table for a plan: one parquet read over
     * exactly the planned files, then a single latest-wins merge. The union of
     * full + incrementals never round-trips through per-file loops — Spark
-    * schedules all row groups of all selected files as one scan stage.
+    * schedules all row groups of all selected files as one scan stage. The
+    * schema is the full export's (the first path), read from its footer on
+    * the driver, as Spark's non-merging inference would take it: a column
+    * that only a later incremental carries is not read.
     */
   def load(
       spark: SparkSession,
@@ -165,6 +169,6 @@ object ExportCatalog {
       ord: Seq[String]): DataFrame = {
     val paths = p.parquetPaths
     require(paths.nonEmpty, "plan contains only .empty windows")
-    MergeOps.latestByKey(spark.read.parquet(paths: _*), keys, ord)
+    MergeOps.latestByKey(ParquetTables.open(spark, paths: _*), keys, ord)
   }
 }

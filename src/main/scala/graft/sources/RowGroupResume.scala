@@ -57,11 +57,14 @@ object RowGroupResume {
     */
   final case class ParquetFooter(status: FileStatus, groups: Seq[RowGroup], schema: StructType)
 
-  private def readFooter[T](conf: Configuration, file: String)(f: (FileStatus, ParquetMetadata) => T): T = {
+  private def status(conf: Configuration, file: String): FileStatus = {
     val path = new Path(file)
-    val status = path.getFileSystem(conf).getFileStatus(path)
+    path.getFileSystem(conf).getFileStatus(path)
+  }
+
+  private def readFooter[T](conf: Configuration, status: FileStatus)(f: ParquetMetadata => T): T = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-    try f(status, reader.getFooter) finally reader.close()
+    try f(reader.getFooter) finally reader.close()
   }
 
   private def groupsOf(footer: ParquetMetadata): Seq[RowGroup] = {
@@ -77,12 +80,16 @@ object RowGroupResume {
     * data pages touched.
     */
   def rowGroups(conf: Configuration, file: String): Seq[RowGroup] =
-    readFooter(conf, file)((_, footer) => groupsOf(footer))
+    readFooter(conf, status(conf, file))(groupsOf)
 
   /** Row groups and Spark schema of `file` from a single footer read. */
   def footer(spark: SparkSession, file: String): ParquetFooter =
-    readFooter(spark.sparkContext.hadoopConfiguration, file) { (status, footer) =>
-      ParquetFooter(status, groupsOf(footer), RowGroupScan.schema(spark, status, footer))
+    footer(spark, status(spark.sparkContext.hadoopConfiguration, file))
+
+  /** The same, for a file whose status a listing already returned. */
+  def footer(spark: SparkSession, file: FileStatus): ParquetFooter =
+    readFooter(spark.sparkContext.hadoopConfiguration, file) { footer =>
+      ParquetFooter(file, groupsOf(footer), RowGroupScan.schema(spark, file, footer))
     }
 
   /** Tracking markers live under `trackingDir/<base name>-<path hash>/rg-<N>`.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.MergeOps
+import graft.sources.ParquetTables
 
 /** Structured-Streaming re-expression of the reference's incremental loop.
   *
@@ -20,6 +21,9 @@ object IncrementalStream {
   /** Tail `inputDir` for new parquet slices and maintain a latest-wins state
     * table at `stateDir` (parquet, overwritten per micro-batch after merging
     * with the previous state — a MERGE INTO in Delta/Iceberg deployments).
+    * Each micro-batch re-opens the state through [[ParquetTables.open]]: its
+    * schema comes from one part file's footer, read on the driver, so the
+    * merge adds no schema-inference job to the batch.
     */
   def run(
       spark: SparkSession,
@@ -55,7 +59,7 @@ object IncrementalStream {
         if (!fs.exists(dst) && fs.exists(prev)) renameOrFail(prev, dst)
         val merged =
           if (fs.exists(dst))
-            MergeOps.snapshotMerge(batch.sparkSession.read.parquet(stateDir), batch, keys, ord)
+            MergeOps.snapshotMerge(ParquetTables.open(batch.sparkSession, stateDir), batch, keys, ord)
           else MergeOps.latestByKey(batch, keys, ord)
         // stage → set aside → swap: at every instant either `dst` or `prev`
         // holds a complete state table (delete-then-rename would not)

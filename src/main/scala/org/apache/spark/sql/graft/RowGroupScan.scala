@@ -27,7 +27,9 @@ object RowGroupScan {
 
   /** The schema `spark.read.parquet(file)` infers, from a footer already in
     * hand: Spark's own footer-to-schema rule under the session's converter
-    * settings, made nullable as every file-source relation is.
+    * settings, made nullable as every file-source relation is. Both the
+    * row-group import and every table open (`graft.sources.ParquetTables`)
+    * take their schema from here, through `RowGroupResume.footer`.
     */
   def schema(spark: SparkSession, file: FileStatus, footer: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),

@@ -8,7 +8,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * inside that window. These pins run `Bench.compactLine` itself: short
   * keys must stay unique (else the mapping to query names is ambiguous),
   * and the line must stay within `Bench.compactLimit` — with `qmed` when
-  * it fits, with the overflow marker when it does not.
+  * it fits, with the overflow marker when it does not. The last test pins
+  * `Bench.select`, which picks the queries of a filtered run.
   */
 class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -62,5 +63,17 @@ class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(parse(l).get("qmed_overflow").asText == artifact)
     val fits = line(many.take(3))
     assert(parse(fits).get("qmed").get("x001").asDouble == 12345.67)
+  }
+
+  test("a filtered run takes its queries in headline order and rejects every unknown name") {
+    val defined = Seq("q01_latest_wins", "q08_profiles_view", "s11_kmeans_train")
+    assert(Bench.select(defined, None) == defined)
+    assert(Bench.select(defined, Some("s11_kmeans_train, q01_latest_wins")) ==
+      Seq("q01_latest_wins", "s11_kmeans_train"))
+    val e = intercept[IllegalArgumentException](
+      Bench.select(defined, Some("s04_cluster_centroids,q08_profiles_view,q99_nothing")))
+    assert(e.getMessage.contains("s04_cluster_centroids") && e.getMessage.contains("q99_nothing"), e.getMessage)
+    assert(!e.getMessage.contains("q08_profiles_view"), e.getMessage)
+    intercept[IllegalArgumentException](Bench.select(defined, Some(" , ")))
   }
 }

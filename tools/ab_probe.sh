@@ -18,7 +18,8 @@
 # interleaved timed passes, per-query min) on the SAME data.
 # Alternation bounds host-climate drift: any slow window hits both sides.
 # tools/ab_merge.py merges the invocations into <out.json>. Bench times
-# headline queries only: a listed query outside Bench.headline is skipped.
+# headline queries only: a listed query outside Bench.headline stops the run
+# with an error naming it.
 #
 # NO other sbt/JVM workload may run concurrently (timings poison).
 set -eu
