@@ -185,6 +185,37 @@ final class KvBuffer(val k: Int) {
     val it = other.map.entrySet().iterator()
     while (it.hasNext) { val e = it.next(); insert(e.getKey, e.getValue) }
   }
+
+  /** The sample as parallel (hashes, values) arrays in unsigned-hash order. */
+  def sample: (Array[Long], Array[Long]) = {
+    val n = map.size()
+    val hs = new Array[Long](n)
+    val vs = new Array[Long](n)
+    val it = map.entrySet().iterator()
+    var i = 0
+    while (it.hasNext) { val e = it.next(); hs(i) = e.getKey; vs(i) = e.getValue; i += 1 }
+    (hs, vs)
+  }
+
+  /** (n_sample, p50, p90), all 0 for an empty sample: q26's type-1
+    * `rn == ceil(n·q)` picks over the sample sorted by (value asc,
+    * unsigned hash asc) — the oracle's ORDER BY. The batch aggregate and
+    * its streaming twin both pick here.
+    */
+  def quantiles: (Long, Long, Long) = {
+    val (hs, vs) = sample
+    val n = vs.length
+    if (n == 0) return (0L, 0L, 0L)
+    val idx = (0 until n).sortWith { (x, y) =>
+      if (vs(x) != vs(y)) vs(x) < vs(y)
+      else java.lang.Long.compareUnsigned(hs(x), hs(y)) < 0
+    }
+    // type-1 pick via the SAME FP ceil the oracle computes (q26's rule:
+    // ceil(n*0.9) in IEEE can exceed the true rational ceil — both engines
+    // must take the identical FP path, so no integer shortcut here)
+    def pick(q: Double): Long = vs(idx(math.ceil(n * q).toInt - 1))
+    (n.toLong, pick(0.5), pick(0.9))
+  }
 }
 
 /** Deterministic sample-quantile sketch (see KmvSketch.quantileSketch).
@@ -226,23 +257,8 @@ case class QuantileSketch(
   }
 
   override def eval(buffer: KvBuffer): Any = {
-    val n = buffer.map.size()
-    if (n == 0) return InternalRow(0L, 0L, 0L)
-    val hs = new Array[Long](n)
-    val vs = new Array[Long](n)
-    val it = buffer.map.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) { val e = it.next(); hs(i) = e.getKey; vs(i) = e.getValue; i += 1 }
-    // sort sample by (value asc, unsigned hash asc) — the oracle's ORDER BY
-    val idx = (0 until n).sortWith { (x, y) =>
-      if (vs(x) != vs(y)) vs(x) < vs(y)
-      else java.lang.Long.compareUnsigned(hs(x), hs(y)) < 0
-    }
-    // type-1 pick via the SAME FP ceil the oracle computes (q26's rule:
-    // ceil(n*0.9) in IEEE can exceed the true rational ceil — both engines
-    // must take the identical FP path, so no integer shortcut here)
-    def pick(q: Double): Long = vs(idx(math.ceil(n * q).toInt - 1))
-    InternalRow(n.toLong, pick(0.5), pick(0.9))
+    val (n, p50, p90) = buffer.quantiles
+    InternalRow(n, p50, p90)
   }
 
   override def serialize(buffer: KvBuffer): Array[Byte] = {

@@ -155,22 +155,6 @@ object Dedup {
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
       .select(col("canonical_id"), col("n_copies"))
 
-  /** Candidate near-duplicate pairs via MinHash + LSH banding, with the
-    * MinHash-estimated Jaccard attached. Pairs are (a < b), distinct.
-    */
-  /** (id, sig, band) rows: MinHash signature per doc, exploded to one row
-    * per LSH band — the shared front end of every minhash pipeline (full
-    * self-join and delta alike, so their banding can never diverge).
-    *
-    * `barrier = true` inserts a repartition on id: it materializes the
-    * signature exactly once per doc (without it Catalyst can inline the
-    * signature tree past the explode into per-band evaluation) and is the
-    * co-locating exchange a SELF-join wants. Pass `false` for a side that
-    * must NOT shuffle (the streamed corpus side of the delta join): band
-    * rows then stay in their scan stage, trading a possible bands-fold
-    * recompute of the codegen'd signature inside that stage for zero
-    * exchange.
-    */
   /** `(id, sig)` minhash signature projection — the one definition the
     * self-join ([[minhashLsh]]) and delta ([[ngramJaccardDelta]] via
     * [[bandedSignatures]]) paths both band from.
@@ -194,6 +178,19 @@ object Dedup {
   private def bandsOfSig(numHashes: Int, bands: Int) =
     TextFns.lshBands(col("sig"), bands, numHashes / bands)
 
+  /** (id, sig, band) rows: MinHash signature per doc, exploded to one row
+    * per LSH band — the shared front end of every minhash pipeline (full
+    * self-join and delta alike, so their banding can never diverge).
+    *
+    * `barrier = true` inserts a repartition on id: it materializes the
+    * signature exactly once per doc (without it Catalyst can inline the
+    * signature tree past the explode into per-band evaluation) and is the
+    * co-locating exchange a SELF-join wants. Pass `false` for a side that
+    * must NOT shuffle (the streamed corpus side of the delta join): band
+    * rows then stay in their scan stage, trading a possible bands-fold
+    * recompute of the codegen'd signature inside that stage for zero
+    * exchange.
+    */
   private def bandedSignatures(
       docs: DataFrame,
       idCol: String,
@@ -250,6 +247,9 @@ object Dedup {
       .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
+  /** Candidate near-duplicate pairs via MinHash + LSH banding, with the
+    * MinHash-estimated Jaccard attached. Pairs are (a < b), distinct.
+    */
   def minhashLsh(
       docs: DataFrame,
       idCol: String,
@@ -292,7 +292,8 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs: 64-bit signatures, candidates via 16-bit chunk
-    * banding, kept when hamming distance <= maxHamming.
+    * banding ([[BandLsh.hammingPairs]]), kept when hamming distance <=
+    * maxHamming; a maxHamming above 3 is rejected (the pigeonhole bound).
     */
   def simhash(
       docs: DataFrame,
@@ -301,30 +302,9 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     val sigs = docs.select(
       col(idCol).as("id"),
-      HashExprs.simhash64(HashExprs.tokenShingleHashes(col(textCol), 1)).as("sim"))
-      .repartition(col("id")) // materialize sim once per doc (see minhashLsh)
-    // chunk key packed into one long, (j << 16) | v — the BandLsh.banded
-    // r18 packing (long join keys plan through LongHashedRelation)
-    val banded = sigs.withColumn(
-      "chunk",
-      explode(array((0 until 4).map(j =>
-        lit(j.toLong << 16).bitwiseOR(
-          shiftrightunsigned(col("sim"), j * 16).bitwiseAND(lit(0xFFFFL)))): _*)))
-    val left = banded.select(col("id").as("a"), col("sim").as("sim_a"), col("chunk"))
-    val right = banded.select(col("id").as("b"), col("sim").as("sim_b"), col("chunk"))
-    // band-collision duplicates drop via the stateless first-matching-band
-    // XOR filter (the m07/d07 rule — identical 16-bit × 4 geometry): pair
-    // ownership is a pure function of the two signatures already on the
-    // row, so no groupBy(a, b) exchange ever carries the collision volume.
-    // That exchange was the decade-2 scale bill: near-dup replica clusters
-    // make collision rows grow ~quadratically per decade (109× measured
-    // pair growth sf1→sf10), and every one of them rode the shuffle.
-    left
-      .join(right, Seq("chunk"))
-      .where(col("a") < col("b"))
-      .where(BandLsh.firstMatchingBand(col("sim_a"), col("sim_b"), col("chunk"), 16, 4))
-      .select(col("a"), col("b"), TextFns.hamming64(col("sim_a"), col("sim_b")).as("hamming"))
-      .where(col("hamming") <= lit(maxHamming))
+      HashExprs.simhash64(HashExprs.tokenShingleHashes(col(textCol), 1)).as("sig"))
+      .repartition(col("id")) // materialize sig once per doc (see minhashLsh)
+    BandLsh.hammingPairs(sigs, maxHamming)
   }
 
   /** Candidate-generation operating point shared by [[ngramJaccard]] and
@@ -425,13 +405,9 @@ object Dedup {
       nBands: Int): DataFrame = {
     // barrier: the banded rows feed a self-join — materialize the
     // signature once per vector instead of recomputing per side
-    val banded = BandLsh.banded(embeddings, idCol, vecCol, "id", "_sig",
+    val banded = BandLsh.banded(embeddings, idCol, vecCol, "id", "sig",
       dim, bandBits, nBands, barrier = true)
-    banded.select(col("id").as("a"), col("_sig").as("sa"), col("band"))
-      .join(banded.select(col("id").as("b"), col("_sig").as("sb"), col("band")), Seq("band"))
-      .where(col("a") < col("b"))
-      .where(BandLsh.firstMatchingBand(col("sa"), col("sb"), col("band"), bandBits, nBands))
-      .select(col("a"), col("b"))
+    BandLsh.selfPairs(banded, bandBits, nBands).select(col("a"), col("b"))
   }
 
   /** Embedding near-dup through LSH buckets: hyperplane-band candidates
@@ -493,12 +469,11 @@ object Dedup {
     // its banded rows feed TWO consumers (the union leg and the broadcast
     // driver) — same rule as ngramJaccardDelta's delta side
     val deltaB = BandLsh.banded(delta, idCol, vecCol, "x", "sx", dim, bandBits, nBands, barrier = true)
-    def banded(df: DataFrame, id: String, sig: String): DataFrame =
-      BandLsh.banded(df, idCol, vecCol, id, sig, dim, bandBits, nBands, barrier = false)
     // delta bands drive the join: the union (corpus ∪ delta) on the right
     // keeps delta×delta pairs; the corpus side never shuffles. The union
     // tags which leg a row came from so mirror ownership is stateless.
-    val allB = banded(existing, "y", "sy").withColumn("y_in_delta", lit(false))
+    val allB = BandLsh.banded(existing, idCol, vecCol, "y", "sy", dim, bandBits, nBands, barrier = false)
+      .withColumn("y_in_delta", lit(false))
       .unionByName(
         deltaB.select(col("x").as("y"), col("sx").as("sy"), col("band"))
           .withColumn("y_in_delta", lit(true)))

@@ -233,7 +233,7 @@ object Multimodal {
   }
 
   /** Near-dup frame pairs from 64-bit aHash fingerprints: d03's 16-bit
-    * chunk banding (pigeonhole-exact for hamming ≤ 3: three flips cannot
+    * chunk banding ([[BandLsh.hammingPairs]], pigeonhole-exact for hamming ≤ 3: three flips cannot
     * touch all four chunks) with the SUB-WIDTH QUARANTINE implemented in
     * the plan (VERDICT r7 — previously prose):
     *
@@ -261,36 +261,20 @@ object Multimodal {
       fpCol: String,
       widthCol: String): DataFrame = {
     import graft.functions.TextFns
-    val f = fps.select(col(idCol).as("id"), col(fpCol).as("sim"), col(widthCol).as("w"))
-    val full = f.where(col("w") >= 64).select(col("id"), col("sim"))
+    val f = fps.select(col(idCol).as("id"), col(fpCol).as("sig"), col(widthCol).as("w"))
+    val full = f.where(col("w") >= 64).select(col("id"), col("sig"))
       .repartition(col("id"))
-    // chunk key packed into one long, (j << 16) | v — the BandLsh.banded
-    // r18 packing (long join keys plan through LongHashedRelation)
-    val banded = full.withColumn("chunk",
-      explode(array((0 until 4).map(j =>
-        lit(j.toLong << 16).bitwiseOR(
-          shiftrightunsigned(col("sim"), j * 16).bitwiseAND(lit(0xFFFFL)))): _*)))
-    val left = banded.select(col("id").as("a"), col("sim").as("sim_a"), col("chunk"))
-    val right = banded.select(col("id").as("b"), col("sim").as("sim_b"), col("chunk"))
-    // band-collision duplicates are dropped by the stateless
-    // first-matching-band XOR filter (the d03/d07 rule) — ownership is a
-    // pure function of the two signatures already on the row, so no
-    // groupBy(a, b) exchange ever carries the collision volume
-    val ff = left.join(right, Seq("chunk"))
+    val ff = BandLsh.hammingPairs(full, maxHamming = 3)
+    val quar = f.where(col("w") < 64).select(col("id"), col("sig"))
+    val qq = quar.select(col("id").as("a"), col("sig").as("sig_a"))
+      .crossJoin(broadcast(quar.select(col("id").as("b"), col("sig").as("sig_b"))))
       .where(col("a") < col("b"))
-      .where(BandLsh.firstMatchingBand(col("sim_a"), col("sim_b"), col("chunk"), 16, 4))
-      .select(col("a"), col("b"), TextFns.hamming64(col("sim_a"), col("sim_b")).as("hamming"))
+      .select(col("a"), col("b"), TextFns.hamming64(col("sig_a"), col("sig_b")).as("hamming"))
       .where(col("hamming") <= 3)
-    val quar = f.where(col("w") < 64).select(col("id"), col("sim"))
-    val qq = quar.select(col("id").as("a"), col("sim").as("sim_a"))
-      .crossJoin(broadcast(quar.select(col("id").as("b"), col("sim").as("sim_b"))))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"), TextFns.hamming64(col("sim_a"), col("sim_b")).as("hamming"))
-      .where(col("hamming") <= 3)
-    val qf = full.select(col("id").as("fa"), col("sim").as("sim_a"))
-      .crossJoin(broadcast(quar.select(col("id").as("qb"), col("sim").as("sim_b"))))
+    val qf = full.select(col("id").as("fa"), col("sig").as("sig_a"))
+      .crossJoin(broadcast(quar.select(col("id").as("qb"), col("sig").as("sig_b"))))
       .select(least(col("fa"), col("qb")).as("a"), greatest(col("fa"), col("qb")).as("b"),
-        TextFns.hamming64(col("sim_a"), col("sim_b")).as("hamming"))
+        TextFns.hamming64(col("sig_a"), col("sig_b")).as("hamming"))
       .where(col("hamming") <= 3)
     ff.unionByName(qq).unionByName(qf)
   }

@@ -580,25 +580,14 @@ object Similarity {
       bits: Int = 16,
       bandBits: Int = 4): DataFrame = {
     val nBands = bits / bandBits
-    // shared banding: vectors stay OUT of the band explode — only
-    // (band, id, sig) meets the broadcast join, and band-collision
-    // duplicates are dropped by the stateless first-matching-band filter
-    // instead of a groupBy-max exchange over the collision volume. Each
-    // candidate pair is scored exactly once by the one vector re-join.
-    val c = BandLsh.banded(corpus, idCol, vecCol, "neighbor_id", "cs", dim, bandBits, nBands, barrier = false)
-    val q = BandLsh.banded(queries, idCol, vecCol, "q_id", "qs", dim, bandBits, nBands, barrier = false)
-    val cand = c
-      .join(broadcast(q), Seq("band"))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .where(BandLsh.firstMatchingBand(col("qs"), col("cs"), col("band"), bandBits, nBands))
-      .select(col("q_id"), col("neighbor_id"))
-    val scored = cand
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("_cn")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("_qn"))), Seq("q_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        cosinePre(col("qv"), col("cv"), col("_qn"), col("_cn")).as("cos"))
+    // shared banding: vectors stay OUT of the band explode, and each
+    // candidate pair is scored exactly once by the one vector re-join —
+    // ranked on the unrounded cosine
+    val cand = BandLsh.probeCandidates(corpus, queries, idCol, vecCol, dim, bandBits, nBands)
+    val scored = BandLsh.cosineScores(cand,
+      corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+      queries.select(col(idCol).as("id"), col(vecCol).as("v")),
+      "neighbor_id", "q_id", broadcastB = true)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     scored
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -632,13 +621,7 @@ object Similarity {
       dim: Int,
       bandBits: Int = 2,
       nBands: Int = 32): DataFrame = {
-    def banded(df: DataFrame, id: String, sig: String): DataFrame =
-      BandLsh.banded(df, idCol, vecCol, id, sig, dim, bandBits, nBands, barrier = false)
-    val cand = banded(corpus, "neighbor_id", "cs")
-      .join(broadcast(banded(queries, "q_id", "qs")), Seq("band"))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .where(BandLsh.firstMatchingBand(col("qs"), col("cs"), col("band"), bandBits, nBands))
-      .select(col("q_id"), col("neighbor_id"))
+    val cand = BandLsh.probeCandidates(corpus, queries, idCol, vecCol, dim, bandBits, nBands)
     BandLsh.exactCosineOnCandidates(cand,
         corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
         queries.select(col(idCol).as("id"), col(vecCol).as("v")),

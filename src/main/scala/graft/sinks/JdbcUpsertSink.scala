@@ -186,10 +186,6 @@ object JdbcUpsertSink {
     stmt.executeUpdate()
   }
 
-  /** Distributed upsert: every partition opens its own connection (supplied
-    * by `connect`, so tests can inject a double) and writes in batches of
-    * `batchSize` rows.
-    */
   /** Postgres rejects statements with more than 65535 bind parameters; the
     * reference carries this as a TODO (db.py:797) — here the batch size is
     * clamped so rows × columns always fits.
@@ -273,6 +269,10 @@ object JdbcUpsertSink {
     }
   }
 
+  /** Distributed upsert: every partition opens its own connection (supplied
+    * by `connect`, so tests can inject a double) and writes in batches of
+    * `batchSize` rows.
+    */
   def write(
       df: DataFrame,
       table: String,

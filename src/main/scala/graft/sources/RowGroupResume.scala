@@ -29,11 +29,13 @@ import scala.jdk.CollectionConverters._
   *  - A batch is a scan of exactly its own row groups, one task per group
   *    ([[org.apache.spark.sql.graft.RowGroupScan]]): each task's byte range
   *    is one group's, so batch membership is exact by construction.
-  *  - Progress is a marker file per completed batch (`rg-<lastGroup>`) —
-  *    atomic create, no read-modify-write, safe under concurrent observers.
-  *    Markers are recorded AFTER the sink commits, so the crash window
-  *    re-imports the in-flight batch; the sink's latest-wins upsert makes
-  *    that replay idempotent, exactly the reference's semantics.
+  *  - Progress is a marker file per completed row group (`rg-<index>`,
+  *    one for each group of a batch) — atomic create, no read-modify-write,
+  *    safe under concurrent observers. The resume point is the contiguous
+  *    prefix of markers ([[lastImported]]). Markers are recorded AFTER the
+  *    sink commits, so the crash window re-imports the in-flight batch; the
+  *    sink's latest-wins upsert makes that replay idempotent, exactly the
+  *    reference's semantics.
   *
   * Scale note: a batch touches only its groups' byte ranges, so a full of
   * G groups costs one scan of the file in G tasks whatever the batch size

@@ -5,6 +5,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.BandLsh
+import graft.operators.BandLsh.{HammingBandBits => BandBits, HammingBands => NBands}
+
 /** A document event on the dedup stream: unique `doc_id`, event time (so
   * watermarks apply), and the 64-bit similarity fingerprint (d03's simhash
   * or m06's frame aHash — any fingerprint whose near-duplicates sit at
@@ -65,31 +68,15 @@ final case class DedupBucketState(ids: Array[Long], tsMs: Array[Long], sigs: Arr
   */
 object StreamingDedup {
 
-  val BandBits = 16
-  val NBands = 4
-
-  /** Lowest band index where the two signatures share a chunk (-1 if
-    * none) — the cross-bucket emission owner.
-    */
-  def firstMatchingBand(sa: Long, sb: Long): Int = {
-    val x = sa ^ sb
-    var j = 0
-    while (j < NBands) {
-      if (((x >>> (j * BandBits)) & 0xFFFFL) == 0L) return j
-      j += 1
-    }
-    -1
-  }
-
   /** `docs` must carry a watermark on `ts` before calling. `maxHamming`
-    * must stay below `NBands` for the banding to be pigeonhole-complete.
+    * must stay below the band count for the banding to be
+    * pigeonhole-complete ([[BandLsh.requirePigeonhole]]).
     */
   def nearDupPairsWithinHorizon(
       docs: Dataset[SimDocEvent],
       horizonMs: Long,
       maxHamming: Int = 3): Dataset[NearDupPair] = {
-    require(maxHamming < NBands,
-      s"hamming $maxHamming needs > $maxHamming disjoint chunks; $NBands bands guarantee only <= ${NBands - 1}")
+    BandLsh.requirePigeonhole(maxHamming)
     implicit val bandedEnc = Encoders.product[BandedSimDoc]
     implicit val outEnc = Encoders.product[NearDupPair]
     implicit val stEnc = Encoders.product[DedupBucketState]
@@ -98,12 +85,9 @@ object StreamingDedup {
     // banding in COLUMN space (explode), not a typed flatMap: the
     // watermark rides the `ts` attribute and must reach the stateful
     // operator intact
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     val banded = docs.toDF()
-      .withColumn("bucket", explode(array((0 until NBands).map { j =>
-        lit(j.toLong << BandBits) +
-          shiftrightunsigned(col("sig"), j * BandBits).bitwiseAND(lit((1L << BandBits) - 1))
-      }: _*)))
+      .withColumn("bucket", BandLsh.bandKeys(col("sig"), BandBits, NBands))
       .select(col("bucket"), col("doc_id"), col("ts"), col("sig"))
       .as[BandedSimDoc]
     banded
@@ -131,7 +115,7 @@ object StreamingDedup {
               val nTs = n.ts.getTime
               entries.foreach { case (eid, ets, esig) =>
                 if (eid != n.doc_id && math.abs(nTs - ets) <= horizonMs &&
-                  firstMatchingBand(esig, n.sig) == myBand) {
+                  BandLsh.firstMatchingBand(esig, n.sig, BandBits, NBands) == myBand) {
                   val h = java.lang.Long.bitCount(esig ^ n.sig)
                   if (h <= maxHamming)
                     out += NearDupPair(math.min(eid, n.doc_id), math.max(eid, n.doc_id), h, myBand)

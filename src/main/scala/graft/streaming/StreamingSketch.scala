@@ -81,8 +81,8 @@ object StreamingSketch {
     * state contract as [[distinctEstimates]], same prefix parity: the
     * bottom-k (hash, value) sample after batch i is a pure function of
     * the row set seen so far, so each emitted (p50, p90) equals the batch
-    * `quantileSketch` aggregate over the prefix. Picks mirror the batch
-    * eval exactly (value-asc / unsigned-hash-asc order, FP ceil).
+    * `quantileSketch` aggregate over the prefix. Picks are the batch
+    * eval's own ([[KvBuffer.quantiles]]).
     */
   def quantileEstimates(events: Dataset[QuantileInput], k: Int): Dataset[QuantileEstimate] = {
     implicit val outEnc = Encoders.product[QuantileEstimate]
@@ -98,23 +98,10 @@ object StreamingSketch {
             while (i < st.hashes.length) { buf.insert(st.hashes(i), st.values(i)); i += 1 }
           }
           it.foreach(e => buf.insert(e.h, e.v))
-          val n = buf.map.size()
-          val hs = new Array[Long](n)
-          val vs = new Array[Long](n)
-          val iter = buf.map.entrySet().iterator()
-          var i = 0
-          while (iter.hasNext) { val e = iter.next(); hs(i) = e.getKey; vs(i) = e.getValue; i += 1 }
+          val (hs, vs) = buf.sample
           state.update(KvStateRow(hs, vs))
-          if (n == 0) Iterator(QuantileEstimate(key, 0L, 0L, 0L))
-          else {
-            // identical pick logic to QuantileSketch.eval
-            val idx = (0 until n).sortWith { (x, y) =>
-              if (vs(x) != vs(y)) vs(x) < vs(y)
-              else java.lang.Long.compareUnsigned(hs(x), hs(y)) < 0
-            }
-            def pick(q: Double): Long = vs(idx(math.ceil(n * q).toInt - 1))
-            Iterator(QuantileEstimate(key, n.toLong, pick(0.5), pick(0.9)))
-          }
+          val (n, p50, p90) = buf.quantiles
+          Iterator(QuantileEstimate(key, n, p50, p90))
         })
   }
 

@@ -35,6 +35,12 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)) && pairs.contains((4L, 5L)))
   }
 
+  test("simhash rejects maxHamming >= 4, which its 4x16-bit banding cannot complete") {
+    // one flip in each 16-bit chunk is hamming 4 with no shared chunk: the
+    // band join would never see the pair
+    intercept[IllegalArgumentException](Dedup.simhash(docs, "doc_id", "text", maxHamming = 4))
+  }
+
   test("ngram jaccard reports exact similarity on candidates") {
     val out = Dedup.ngramJaccard(docs, "doc_id", "text", minJaccard = 0.5)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2) -> t._3).toMap

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Merge the interleaved A/B invocation artifacts (tools/ab_probe.sh,
-tools/ab_pqmmr.sh) into one verdict file. Per query and side: min over every
+"""Merge the interleaved A/B invocation artifacts (tools/ab_probe.sh) into
+one verdict file. Per query and side: min over every
 sample of every invocation (each invocation already records per-query
 n/min/med/max in its stats field). The verdict is plan-attributable iff
 HEAD/A per-query min ratios exceed ~1.1x consistently; one-off spikes are
